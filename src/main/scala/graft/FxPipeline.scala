@@ -66,7 +66,7 @@ object FxPipeline {
         Layout.appendPartitioned(fresh, rawPath, "ts", Seq("event_type", "user_id"))
     }
     spark.catalog.refreshByPath(rawPath)
-    spark.read.parquet(rawPath)
+    Tables.parquet(spark, rawPath)
   }
 
   /** The reference DAG-1 in one call: raw newline-JSON feed → typed
@@ -114,7 +114,7 @@ object FxPipeline {
   private def readTableIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
+    if (fs.exists(p)) Some(Tables.parquet(spark, path)) else None
   }
 
   /** Heal the crash window of a previous `stageAndSwap`: if a run died
@@ -202,7 +202,7 @@ object FxPipeline {
       ingest(spark, slice, rawPath)
       day = day.plusDays(1)
     }
-    spark.read.parquet(rawPath)
+    Tables.parquet(spark, rawPath)
   }
 
   /** Airflow's `catchup=True` on schedule resume: ingest every source
@@ -214,7 +214,7 @@ object FxPipeline {
   def catchUp(spark: SparkSession, source: DataFrame, rawPath: String): DataFrame = {
     val span = source.agg(
       F.min(F.to_date(F.col("ts"))).as("lo"), F.max(F.to_date(F.col("ts"))).as("hi")).head()
-    if (span.isNullAt(0)) return spark.read.parquet(rawPath) // empty source: nothing to do
+    if (span.isNullAt(0)) return Tables.parquet(spark, rawPath) // empty source: nothing to do
     val (srcLo, srcHi) = (span.getDate(0).toLocalDate, span.getDate(1).toLocalDate)
     val from = readTableIfExists(spark, rawPath) match {
       case None => srcLo
@@ -226,13 +226,13 @@ object FxPipeline {
           if (d.isBefore(srcLo)) srcLo else d
         }
     }
-    if (from.isAfter(srcHi)) spark.read.parquet(rawPath)
+    if (from.isAfter(srcHi)) Tables.parquet(spark, rawPath)
     else backfill(spark, source, rawPath, from, srcHi)
   }
 
   def report(spark: SparkSession, rawPath: String, reportPath: String): DataFrame = {
     recoverInterrupted(spark, reportPath)
-    val raw = spark.read.parquet(rawPath)
+    val raw = Tables.parquet(spark, rawPath)
     val agg = raw
       .groupBy(F.to_date(F.col("ts")).as("day"), F.col("event_type"))
       .agg(F.avg("rate").as("avg_rate"), F.count(F.lit(1)).as("n"))
@@ -244,6 +244,6 @@ object FxPipeline {
       case None    => agg
     }
     stageAndSwap(reportPath)(Layout.writePartitioned(merged, _, "ts", Seq("event_type")))
-    spark.read.parquet(reportPath)
+    Tables.parquet(spark, reportPath)
   }
 }

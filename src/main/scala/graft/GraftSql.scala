@@ -1506,7 +1506,7 @@ object GraftSql {
             .sortWithinPartitions(clusterCols.map(F.col): _*)
             .write.mode("overwrite").parquet(path)
       }
-      spark.read.parquet(path).createOrReplaceTempView(name)
+      graft.sources.Tables.parquet(spark, path).createOrReplaceTempView(name)
       partRegistry(mvKey(spark, name)) = path
       spark.table(name)
     case _ => throw new IllegalArgumentException(
@@ -4773,7 +4773,7 @@ object GraftSql {
       import org.apache.spark.sql.{functions => FF}
       postings.repartition(FF.col("token"))
         .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path).createOrReplaceTempView(name)
+      graft.sources.Tables.parquet(spark, path).createOrReplaceTempView(name)
       searchIdxRegistry(mvKey(spark, name)) = SearchIdxState(
         viewName(rawTbl), idCol, textCol,
         if (analyzer == "LOG") "LOG_ANALYZER" else "NO_OP_ANALYZER")

@@ -46,14 +46,6 @@ object text {
     F.size(F.filter(t, x => x.isin(stopwords: _*))).cast("double") / F.size(t)
   }
 
-  /** Fraction of characters that are ASCII letters. */
-  def alphaRatio(c: Column): Column =
-    F.length(F.regexp_replace(F.lower(c), "[^a-z]", "")).cast("double") / F.length(c)
-
-  /** Fraction of characters that are sentence punctuation. */
-  def punctRatio(c: Column): Column =
-    F.length(F.regexp_replace(c, "[^.,;:!?]", "")).cast("double") / F.length(c)
-
   /** Distinct-token / token ratio — low values flag degenerate
     * repetition (a standard LLM-corpus quality signal).
     */

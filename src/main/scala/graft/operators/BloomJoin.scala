@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.types.DataType
 
 import graft.functions.bloom
+import graft.sources.Tables
 
 /** Bloom-reduced semi/anti joins — applying a droplist (or allowlist)
   * to a corpus when the list side is past broadcast size but its KEY
@@ -185,7 +186,7 @@ object BloomJoin {
   }
 
   def loadFilter(spark: SparkSession, path: String): PersistedFilter = {
-    val row = spark.read.parquet(path).head()
+    val row = Tables.parquet(spark, path).head()
     PersistedFilter(
       row.getAs[Array[Byte]]("filter"),
       row.getSeq[String](row.fieldIndex("keys")),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.functions.{aggregates, native}
+import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2 D-block).
@@ -205,7 +206,7 @@ object Similarity {
                                idCol: String = "vec_id", vecCol: String = "embedding",
                                qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     require(rerank >= k, s"rerank=$rerank must be >= k=$k")
-    val layout = spark.read.parquet(path)
+    val layout = Tables.parquet(spark, path)
     val stored = layout.select(F.size(F.col("prefix")).as("n")).limit(1).collect()
     require(stored.isEmpty || stored.head.getInt(0) == prefixDim,
       s"layout at $path stores prefix width ${stored.headOption.map(_.getInt(0)).getOrElse(-1)}, " +
@@ -392,7 +393,7 @@ object Similarity {
       .select(F.col(qidCol), F.col("cell"))
     val wantedCells = probeTop.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted
-    val pruned = spark.read.parquet(path)
+    val pruned = Tables.parquet(spark, path)
       .filter(F.col("cell").isin(wantedCells: _*))
     val scored = pruned
       .join(F.broadcast(probeTop.join(queries, qidCol)), Seq("cell"))
@@ -437,7 +438,7 @@ object Similarity {
       .withColumnRenamed("cell", "__cell")
     val wantedCells = probeTop.select("__cell").distinct()
       .collect().map(_.getLong(0)).sorted
-    val layout = spark.read.parquet(path)
+    val layout = Tables.parquet(spark, path)
     // literal IN on the partition column in ITS OWN type — a cast on
     // the column side would defeat partition pruning
     val lits: Seq[Any] = layout.schema("cell").dataType match {
@@ -614,7 +615,7 @@ object Similarity {
                             bands: Int = 8, multiprobe: Boolean = true,
                             idCol: String = "vec_id",
                             qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val qc = spark.read.parquet(path)
+    val qc = Tables.parquet(spark, path)
       .select(F.col(idCol), F.col("codes").cast("array<float>").as("__codes"))
     int8CodesTopK(qc, queries, k, planes, bands, multiprobe, idCol, qidCol, qvecCol)
   }
@@ -745,7 +746,7 @@ object Similarity {
                        codebooks: Seq[Seq[Seq[Float]]], rerank: Int = 64,
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val codes = spark.read.parquet(path)
+    val codes = Tables.parquet(spark, path)
     adcRerankTopK(codes, corpus, queries, k, rerank, codebooks, idCol, vecCol, qidCol, qvecCol)
   }
 
@@ -798,7 +799,7 @@ object Similarity {
       .select(F.col(qidCol), F.col("cell"))
     val wantedCells = probeTop.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted
-    val layout = spark.read.parquet(path)
+    val layout = Tables.parquet(spark, path)
       .filter(F.col("cell").isin(wantedCells: _*))
     val q = queries.select(F.col(qidCol),
       native.pq_lut(F.col(qvecCol), codebooks).as("__lut"))

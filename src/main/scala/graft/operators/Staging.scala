@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
+import graft.sources.Tables
 
 /** Lineage truncation for iterative / multi-stage operators, with a
   * caller-chosen durability level.
@@ -50,7 +51,7 @@ object Staging {
               "operator invocations; use a fresh directory per invocation (the previous " +
               "invocation's returned frame still reads its last stage)")
         df.write.parquet(path)
-        df.sparkSession.read.parquet(path)
+        Tables.parquet(df.sparkSession, path)
     }
 
   /** Lazy lineage truncation: mark `df` for executor-local

@@ -39,7 +39,9 @@ object Upsert {
   def freshRows(target: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
     batch
       .dropDuplicates(keys) // a key delivered twice IN the batch is still one logical row
-      .join(target.select(keys.map(F.col): _*).distinct(), keys, "left_anti")
+      // a left-anti join keeps a batch row iff NO target row matches it,
+      // so duplicated target keys need no distinct() aggregate first
+      .join(target.select(keys.map(F.col): _*), keys, "left_anti")
 
   /** MERGE: rows in both sides take `source`'s non-key values; rows
     * only in `target` or only in `source` pass through. Equivalent to
@@ -85,16 +87,6 @@ object Upsert {
       .select(target.columns.toSeq.map(c => F.col(s"s.$c").as(c)): _*)
     updated.unionByName(inserts)
   }
-
-  /** MERGE with a possibly-duplicated source: keep only the newest
-    * source row per key (by `ts`, then `tieBreak`) before merging —
-    * `merge` itself requires unique source keys (a duplicated key
-    * would fan the update join out; BigQuery MERGE raises an error in
-    * that situation).
-    */
-  def mergeLatest(target: DataFrame, source: DataFrame, keys: Seq[String],
-                  ts: String, tieBreak: Seq[String] = Nil): DataFrame =
-    merge(target, dedupLatest(source, keys, ts, tieBreak), keys)
 
   /** Keep the single newest row per key, ordered by `ts` descending
     * with `tieBreak` columns as deterministic tie-breakers.

@@ -152,7 +152,7 @@ object Layout {
     if (crowded.isEmpty) return Nil
     var committed: Seq[String] = Nil
     withDynamicPartitionOverwrite(spark) {
-      val snapshot = spark.read.parquet(path)
+      val snapshot = Tables.parquet(spark, path)
         .filter(F.col("p_day").isInCollection(crowded.map(c => java.sql.Date.valueOf(c._1))))
         // Spark (rightly) refuses to overwrite a path its plan reads
         // from; localCheckpoint truncates the lineage to executor-held

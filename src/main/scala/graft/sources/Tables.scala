@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the test-data star schema + events/documents/embeddings.
   *
@@ -10,6 +12,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and prune columns into the parquet scan.
   */
 object Tables {
+  /** Open a parquet table — one or more files or (day-partitioned)
+    * directories — WITHOUT a Spark job. A plain `spark.read.parquet`
+    * infers the data schema in a 1-task job that reads one footer;
+    * here that footer is read on the driver ([[FooterSchema]]) and
+    * handed over as the schema. Partition columns are still inferred
+    * from the directory names, and where the footer cannot stand in
+    * for Spark's inference the plain read runs instead, so the frame
+    * (schema, rows, errors) is the one `spark.read.parquet` returns.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    FooterSchema.infer(spark, paths) match {
+      case None => spark.read.parquet(paths: _*)
+      case Some(data) =>
+        val df = spark.read.schema(data).parquet(paths: _*)
+        val part = FooterSchema.partitionSchema(df)
+        val resolver = spark.sessionState.conf.resolver
+        def partOf(name: String) = part.find(p => resolver(p.name, name))
+        if (!data.exists(f => partOf(f.name).isDefined)) df
+        else {
+          // the data files also hold a partition column: Spark keeps it
+          // at its data position but with the partition's value and
+          // inferred type, so reopen with it inferred and move it back
+          val order = data.map(f => partOf(f.name).fold(f.name)(_.name)) ++
+            part.map(_.name).filterNot(n => data.exists(f => resolver(f.name, n)))
+          spark.read.schema(StructType(data.filterNot(f => partOf(f.name).isDefined)))
+            .parquet(paths: _*)
+            .select(order.map(n => F.col("`" + n.replace("`", "``") + "`")): _*)
+        }
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     fanOut(spark, spark.read.parquet(s"$dir/$name.parquet"), s"$dir/$name.parquet")
 

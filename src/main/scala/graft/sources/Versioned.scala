@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * is rewritten or copied: copy-on-write at commit granularity, the
   * Delta/Iceberg snapshot idea without their jars), an OVERWRITE's
   * manifest is its own directory alone (the old files stay on disk,
-  * owned by history). Reading a version is `spark.read.parquet` over
+  * owned by history). Reading a version is `Tables.parquet` over
   * the manifest's live list — the log, not a directory listing,
   * scopes the scan, so stale files from overwritten versions are
   * never touched and `readAsOf` needs no per-file timestamps.
@@ -242,7 +242,7 @@ object Versioned {
     // an empty live list cannot happen by construction (every commit
     // writes a data dir), but guard the read anyway
     require(c.live.nonEmpty, s"corrupt manifest v${c.version}: empty live set")
-    spark.read.parquet(c.live.map(d => s"$table/$d"): _*)
+    Tables.parquet(spark, c.live.map(d => s"$table/$d"): _*)
   }
 
   /** Rewrite the live set into ONE fresh commit (content-identical,
@@ -315,7 +315,7 @@ object Versioned {
         s"APPENDS cannot represent commit v${c.version} (action '${c.action}'): " +
           "its live set rewrites history — row-level history across a rewrite " +
           "is CHANGES(...)"))
-      withChangeCols(spark.read.parquet(delta.map(d => s"$table/$d"): _*),
+      withChangeCols(Tables.parquet(spark, delta.map(d => s"$table/$d"): _*),
         "INSERT", c.commitTsUs)
     }
     if (branches.isEmpty) emptyChanges(spark, table)
@@ -346,7 +346,7 @@ object Versioned {
     val branches = windowPairs(all, startUs, endUs).flatMap { case (prior, c) =>
       deltaDirs(prior, c) match {
         case Some(delta) =>
-          Some(withChangeCols(spark.read.parquet(delta.map(d => s"$table/$d"): _*),
+          Some(withChangeCols(Tables.parquet(spark, delta.map(d => s"$table/$d"): _*),
             "INSERT", c.commitTsUs))
         case None if c.action == "compact" => None
         case None =>

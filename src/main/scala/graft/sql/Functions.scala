@@ -640,77 +640,6 @@ private[graft] object Functions {
       s"(2.0D * 6371010.0D * asin(sqrt($dlat * $dlat + " +
         s"cos(radians((${a}).lat)) * cos(radians((${b}).lat)) * $dlng * $dlng)))"
     }
-    // ── non-point geography (round 15): folds over the
-    // ARRAY<STRUCT<lng, lat>> line/ring carrier. All three are
-    // LEFT-TO-RIGHT aggregate() folds of correctly-rounded IEEE
-    // arithmetic plus the same libm names the point core uses
-    // (sin/cos/asin) — a DuckDB oracle spelling the identical fold
-    // stays within ~1e-9 relative, which integer metric buckets
-    // absorb. The fold is O(vertices) per row, map-only.
-    //
-    // sum of haversine segment lengths (ST_LENGTH on a linestring,
-    // ST_PERIMETER on a closed ring — BigQuery defines both as the
-    // geodesic boundary length; a sub-2-vertex array is 0)
-    def stSegmentSum(g: String): String = {
-      val a = s"element_at(($g), i)"
-      val b = s"element_at(($g), i + 1)"
-      s"(CASE WHEN size(($g)) < 2 THEN CAST(0.0 AS DOUBLE) ELSE " +
-        s"aggregate(sequence(1, size(($g)) - 1), CAST(0.0 AS DOUBLE), " +
-        s"(acc, i) -> acc + ${stHaversine(a, b)}) END)"
-    }
-    // spherical shoelace (Chamberlain–Duquette, JPL pub. 07-03): the
-    // signed-area fold |Σ Δλ·(2 + sin φᵢ + sin φᵢ₊₁)|·R²/2 over the
-    // closed ring, with Δλ wrapped into [-π, π] through a floor()
-    // (antimeridian-crossing edges take the short way, like BigQuery;
-    // floor is IEEE-exact so the wrap replays). Exact for constant-
-    // latitude edges, a small-polygon approximation of BigQuery's S2
-    // geodesic edges otherwise — stated in SURVEY §2.
-    def stAreaText(p: String): String = {
-      val la = s"radians(element_at(($p), i).lng)"
-      val lb = s"radians(element_at(($p), i + 1).lng)"
-      val dl = s"($lb - $la)"
-      val dln = s"($dl - 2.0D * pi() * floor($dl / (2.0D * pi()) + 0.5D))"
-      val term = s"$dln * (2.0D + sin(radians(element_at(($p), i).lat)) + " +
-        s"sin(radians(element_at(($p), i + 1).lat)))"
-      s"(CASE WHEN size(($p)) < 4 THEN CAST(0.0 AS DOUBLE) ELSE " +
-        s"abs(aggregate(sequence(1, size(($p)) - 1), CAST(0.0 AS DOUBLE), " +
-        s"(acc, i) -> acc + $term)) * 6371010.0D * 6371010.0D / 2.0D END)"
-    }
-    // even-odd ray cast of a point against the ring, in PLANAR
-    // lng/lat space (BigQuery's edges are geodesics — for the
-    // sub-degree rings this engine's carriers target the planar test
-    // agrees; stated). Strict inequalities: boundary points follow
-    // the ray rule (BigQuery ST_CONTAINS also excludes the boundary).
-    // Pure compare/multiply/divide — bit-exact in any IEEE engine, so
-    // the oracle replays crossing counts EXACTLY, not approximately.
-    def stRayCast(p: String, q: String): String = {
-      val a = s"element_at(($p), i)"
-      val b = s"element_at(($p), i + 1)"
-      s"(CASE WHEN size(($p)) < 4 THEN false ELSE " +
-        s"aggregate(sequence(1, size(($p)) - 1), 0, (acc, i) -> acc + (CASE WHEN " +
-        s"(($a).lat > ($q).lat) != (($b).lat > ($q).lat) AND " +
-        s"($q).lng < (($b).lng - ($a).lng) * (($q).lat - ($a).lat) / " +
-        s"(($b).lat - ($a).lat) + ($a).lng " +
-        s"THEN 1 ELSE 0 END)) % 2 = 1 END)"
-    }
-    // point-on-boundary test against the ring/line's segments, in the
-    // same planar lng/lat space as the ray cast: exact collinearity
-    // (cross product equals zero) AND the point inside the segment's
-    // bounding box. Pure IEEE multiply/compare in a fixed order — the
-    // oracle replays it bit-for-bit. This is the boundary half the
-    // strict ray cast deliberately excludes; COVERS/TOUCHES compose it.
-    def stOnBoundary(p: String, q: String): String = {
-      val a = s"element_at(($p), i)"
-      val b = s"element_at(($p), i + 1)"
-      s"(CASE WHEN size(($p)) < 2 THEN false ELSE " +
-        s"aggregate(sequence(1, size(($p)) - 1), false, (acc, i) -> acc OR (" +
-        s"(($b).lng - ($a).lng) * (($q).lat - ($a).lat) = " +
-        s"(($b).lat - ($a).lat) * (($q).lng - ($a).lng) AND " +
-        s"($q).lng >= least(($a).lng, ($b).lng) AND " +
-        s"($q).lng <= greatest(($a).lng, ($b).lng) AND " +
-        s"($q).lat >= least(($a).lat, ($b).lat) AND " +
-        s"($q).lat <= greatest(($a).lat, ($b).lat))) END)"
-    }
     val allNames = BqRenames.keys.toSeq ++ shapeNames
     def unquote(lit: String, ctx: String): String = {
       require(lit.length >= 2 && lit.startsWith("'") && lit.endsWith("'"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 import graft.operators.Upsert
+import graft.sources.Tables
 
 /** Structured-Streaming re-expression of the reference's cadence
   * (SURVEY.md §2 G-block): DAG-1's every-minute ingestion becomes a
@@ -46,7 +47,7 @@ object EventStream {
                  wireTsType: Option[DataType] = None): DataFrame = {
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val tsType = wireTsType.getOrElse {
-      try spark.read.parquet(dir).schema("ts").dataType
+      try Tables.parquet(spark, dir).schema("ts").dataType
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(

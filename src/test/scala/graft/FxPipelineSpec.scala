@@ -157,6 +157,25 @@ class FxPipelineSpec extends SparkSuite {
     assert(out.exceptAll(want).count() == 0)
   }
 
+  test("ingestJson and report into existing tables open them without schema jobs") {
+    val root = Files.createTempDirectory("graft-fxjobs-").toString
+    val feed = s"$root/feed"
+    val raw = s"$root/exchange_rate"
+    val rep = s"$root/exchange_rate_report"
+    Tables.events(spark, sf).select(F.to_json(F.struct(
+        F.col("event_id"), F.col("user_id"), F.col("event_type"), F.col("value"),
+        F.unix_micros(F.col("ts")).as("ts_us"))).as("value"))
+      .write.text(feed)
+    FxPipeline.ingestJson(spark, feed, raw)
+    FxPipeline.report(spark, raw, rep)
+    // a second call into the existing tables: 9 and 8 jobs when every
+    // table open inferred its schema in a job of its own
+    val ingestJobs = jobsStartedBy(FxPipeline.ingestJson(spark, feed, raw))
+    assert(ingestJobs <= 6, s"ingestJson started $ingestJobs jobs")
+    val reportJobs = jobsStartedBy(FxPipeline.report(spark, raw, rep))
+    assert(reportJobs <= 5, s"report started $reportJobs jobs")
+  }
+
   test("backfill replays per-day task instances; interrupted backfill resumes; catchUp tops up") {
     val root = Files.createTempDirectory("graft-backfill-").toString
     val raw = s"$root/exchange_rate"

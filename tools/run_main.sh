@@ -4,7 +4,8 @@
 # Usage: tools/run_main.sh graft.Bench [args...]
 set -euo pipefail
 MAIN="$1"; shift
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$REPO/target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
