@@ -11,8 +11,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchOne <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val cpus = GraftSession.envCpus
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     val spark: SparkSession = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")

@@ -8,7 +8,7 @@ package graft
   */
 object ExplainFaces {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8)
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
     args.drop(1).foreach { n =>

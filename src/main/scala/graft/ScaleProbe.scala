@@ -90,8 +90,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val cpus = GraftSession.envCpus
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
