@@ -9,8 +9,7 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: DumpPlans <sfDir> <outDir> <tag> <face> ...")
     val Array(d, outDir, tag) = args.take(3)
-    val spark = GraftSession.local(
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(8))
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     args.drop(3).foreach { n =>

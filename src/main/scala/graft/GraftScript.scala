@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sql.Lexer
 
 /** BigQuery multi-statement scripts (procedural language) over the
   * [[GraftSql]] statement surface — the form the reference's DAGs
@@ -112,14 +113,16 @@ object GraftScript {
       if (vars.isEmpty && structVars.isEmpty &&
         !sql.toLowerCase(java.util.Locale.ROOT).contains("@@error")) return sql
       val out = new StringBuilder
-      var i = 0; var inStr = false; var inTick = false
+      var i = 0
       var prevWord = "" // last bare word emitted (for the AS-alias rule)
       while (i < sql.length) {
         val c = sql.charAt(i)
-        if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-        else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-        else if (c == '\'') { out += c; inStr = true; i += 1 }
-        else if (c == '`') { out += c; inTick = true; prevWord = ""; i += 1 }
+        val e = Lexer.opaqueEnd(sql, i)
+        if (e > i) {
+          out ++= sql.substring(i, e)
+          if (c == '`') prevWord = ""
+          i = e
+        }
         else if (c == '@' && sql.regionMatches(true, i, "@@error.message", 0, 15)) {
           // the system variable an EXCEPTION handler reads: rendered
           // as a string literal of the caught error's message
@@ -456,15 +459,13 @@ object GraftScript {
   private def bindParams(sql: String, named: Map[String, Lit],
                          positional: Seq[Lit]): String = {
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     var posUsed = 0
     val namedUsed = scala.collection.mutable.Set.empty[String]
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) { out ++= sql.substring(i, e); i = e }
       else if (c == '@' && i + 1 < sql.length && sql.charAt(i + 1) == '@') {
         // @@system_variable: not a parameter — emit verbatim
         out ++= "@@"
@@ -505,16 +506,10 @@ object GraftScript {
     var pos = 0
     def eof: Boolean = { skipWs(); pos >= text.length }
     def skipWs(): Unit = {
-      var go = true
-      while (go) {
-        while (pos < text.length && Character.isWhitespace(text.charAt(pos))) pos += 1
-        if (text.startsWith("--", pos)) {
-          while (pos < text.length && text.charAt(pos) != '\n') pos += 1
-        } else if (text.startsWith("/*", pos)) {
-          val e = text.indexOf("*/", pos + 2)
-          require(e >= 0, "unterminated /* comment */ in script")
-          pos = e + 2
-        } else go = false
+      pos = Lexer.skipSpace(text, pos)
+      while (Lexer.isComment(text, pos)) {
+        require(Lexer.closed(text, pos), "unterminated /* comment */ in script")
+        pos = Lexer.skipSpace(text, Lexer.opaqueEnd(text, pos))
       }
     }
     /** Case-insensitive keyword (sequence) at the cursor, consumed if
@@ -528,8 +523,8 @@ object GraftScript {
         // the identifier-boundary check applies to word-like keywords
         // only ('=' may be followed directly by a digit)
         if (!text.regionMatches(true, pos, w, 0, w.length) ||
-          (isIdentChar(w.last) && pos + w.length < text.length &&
-            isIdentChar(text.charAt(pos + w.length)))) {
+          (Lexer.isWord(w.last) && pos + w.length < text.length &&
+            Lexer.isWord(text.charAt(pos + w.length)))) {
           pos = save; return false
         }
         pos += w.length
@@ -543,55 +538,48 @@ object GraftScript {
       skipWs()
       require(pos < text.length, "unexpected end of script (expected identifier)")
       if (text.charAt(pos) == '`') {
-        val e = text.indexOf('`', pos + 1)
-        require(e >= 0, "unterminated backtick identifier")
-        val s = text.substring(pos + 1, e); pos = e + 1; s
+        require(Lexer.closed(text, pos), "unterminated backtick identifier")
+        val e = Lexer.opaqueEnd(text, pos)
+        val s = text.substring(pos + 1, e - 1); pos = e; s
       } else {
         val start = pos
-        while (pos < text.length && isIdentChar(text.charAt(pos))) pos += 1
+        while (pos < text.length && Lexer.isWord(text.charAt(pos))) pos += 1
         require(pos > start, s"expected identifier at: ${text.substring(start, math.min(start + 30, text.length))}")
         text.substring(start, pos)
       }
     }
-    private def isIdentChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     /** Raw type text: up to a top-level ',' or ')' (neither consumed);
       * parens nest (DECIMAL(38,9)), quotes are opaque.
       */
     def typeText(): String = {
       skipWs()
-      val sb = new StringBuilder
-      var depth = 0; var inStr = false; var done = false
-      while (!done && pos < text.length) {
-        val ch = text.charAt(pos)
-        if (inStr) { sb += ch; if (ch == '\'') inStr = false; pos += 1 }
-        else if (ch == '\'') { sb += ch; inStr = true; pos += 1 }
-        else if (ch == '(') { depth += 1; sb += ch; pos += 1 }
-        else if (ch == ')') {
-          if (depth == 0) done = true else { depth -= 1; sb += ch; pos += 1 }
-        }
-        else if (ch == ',' && depth == 0) done = true
-        else { sb += ch; pos += 1 }
-      }
-      sb.toString.trim
+      val start = pos
+      toClose(commaStops = true)
+      text.substring(start, pos).trim
     }
     /** Raw text up to the ')' closing the CURRENT paren level (not
       * consumed); top-level commas are part of the text.
       */
     def rawUntilCloseParen(): String = {
-      val sb = new StringBuilder
-      var depth = 0; var inStr = false; var done = false
-      while (!done && pos < text.length) {
-        val ch = text.charAt(pos)
-        if (inStr) { sb += ch; if (ch == '\'') inStr = false; pos += 1 }
-        else if (ch == '\'') { sb += ch; inStr = true; pos += 1 }
-        else if (ch == '(') { depth += 1; sb += ch; pos += 1 }
-        else if (ch == ')') {
-          if (depth == 0) done = true else { depth -= 1; sb += ch; pos += 1 }
+      val start = pos
+      require(toClose(commaStops = false), "unterminated ( ... ) in script")
+      text.substring(start, pos)
+    }
+    // moves to the ')' closing the current level (or a top-level ','
+    // when `commaStops`); false at the end of the text
+    private def toClose(commaStops: Boolean): Boolean = {
+      var depth = 0
+      while (pos < text.length) {
+        val e = Lexer.opaqueEnd(text, pos)
+        if (e > pos) pos = e
+        else {
+          val ch = text.charAt(pos)
+          if (depth == 0 && (ch == ')' || (commaStops && ch == ','))) return true
+          if (ch == '(') depth += 1 else if (ch == ')') depth -= 1
+          pos += 1
         }
-        else { sb += ch; pos += 1 }
       }
-      require(done, "unterminated ( ... ) in script")
-      sb.toString
+      false
     }
     /** Raw text up to (not consuming) the first of the given
       * STOPPERS — a top-level ';' or a top-level keyword from `stop`
@@ -603,19 +591,17 @@ object GraftScript {
     def until(stopKeywords: Seq[Seq[String]], stopSemicolon: Boolean): String = {
       skipWs()
       val start = pos
-      var depth = 0; var inStr = false; var inTick = false
+      var depth = 0
       while (pos < text.length) {
         val c = text.charAt(pos)
-        if (inStr) { if (c == '\'') inStr = false; pos += 1 }
-        else if (inTick) { if (c == '`') inTick = false; pos += 1 }
-        else if (c == '\'') { inStr = true; pos += 1 }
-        else if (c == '`') { inTick = true; pos += 1 }
+        val e = Lexer.opaqueEnd(text, pos)
+        if (e > pos) pos = e
         else if (c == '(') { depth += 1; pos += 1 }
         else if (c == ')') { depth -= 1; pos += 1 }
         else if (depth == 0 && c == ';' && stopSemicolon) {
           return text.substring(start, pos).trim
         } else if (depth == 0 && (Character.isLetter(c)) &&
-          (pos == 0 || !isIdentChar(text.charAt(pos - 1))) &&
+          (pos == 0 || !Lexer.isWord(text.charAt(pos - 1))) &&
           stopKeywords.exists(ks => peekKeywordAt(ks))) {
           return text.substring(start, pos).trim
         } else pos += 1
@@ -693,7 +679,7 @@ object GraftScript {
         val raw = c.rawUntilCloseParen() // args to the matching ')'
         c.skipWs(); c.expect(")")
         c.semicolon()
-        val args = if (raw.trim.isEmpty) Seq.empty else splitTopLevelCommas(raw)
+        val args = Lexer.splitTop(raw)
         out += Call(name, args)
       } else
       if (c.keyword("DECLARE")) {
@@ -802,7 +788,7 @@ object GraftScript {
         val using = if (c.keyword("USING")) {
           val text = c.until(Nil, stopSemicolon = true)
           require(text.nonEmpty, "EXECUTE IMMEDIATE USING: missing parameter list")
-          splitTopLevelCommas(text).map(parseUsingItem)
+          Lexer.splitTop(text).map(parseUsingItem)
         } else Nil
         c.semicolon()
         out += ExecImmediate(sqlExpr, into, using)
@@ -828,48 +814,12 @@ object GraftScript {
     out.toSeq
   }
 
-  /** Split on top-level commas (quote-, backtick- and paren-aware). */
-  private def splitTopLevelCommas(text: String): Seq[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    var start = 0; var depth = 0; var inStr = false; var inTick = false
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else if (c == '\'') inStr = true
-      else if (c == '`') inTick = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == ',' && depth == 0) { out += text.substring(start, i).trim; start = i + 1 }
-      i += 1
-    }
-    out += text.substring(start).trim
-    out.toSeq
-  }
-
   /** A USING item: `expr [AS name]` — the LAST top-level AS followed
     * by a lone identifier is the parameter name (an `AS` inside a
     * string literal or a `CAST(x AS T)`'s parens never splits).
     */
   private def parseUsingItem(item: String): (String, Option[String]) = {
-    var lastAs = -1
-    var i = 0; var depth = 0; var inStr = false; var inTick = false
-    while (i < item.length) {
-      val c = item.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '`') { inTick = true; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && (c == 'A' || c == 'a') &&
-        item.regionMatches(true, i, "AS", 0, 2) &&
-        (i == 0 || !Character.isLetterOrDigit(item.charAt(i - 1)) && item.charAt(i - 1) != '_') &&
-        (i + 2 >= item.length || !Character.isLetterOrDigit(item.charAt(i + 2)) && item.charAt(i + 2) != '_')) {
-        lastAs = i; i += 2
-      } else i += 1
-    }
+    val lastAs = Lexer.lastTopWord(item, "AS")
     if (lastAs < 0) return (item, None)
     val name = item.substring(lastAs + 2).trim
     if ("""^[A-Za-z_]\w*$""".r.pattern.matcher(name).matches())
@@ -881,17 +831,8 @@ object GraftScript {
     val q = q0.trim
     if (!q.startsWith("(") || !q.endsWith(")")) return q
     // only strip if the opening paren matches the FINAL char
-    var depth = 0; var inStr = false
-    var i = 0
-    while (i < q.length - 1) {
-      val c = q.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return q }
-      i += 1
-    }
-    q.substring(1, q.length - 1).trim
+    if (Lexer.closeParen(q, 0) != q.length - 1) q
+    else q.substring(1, q.length - 1).trim
   }
 
   private def renderLiteral(v: Any, sparkType: String): String = v match {

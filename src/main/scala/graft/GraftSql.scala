@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttrib
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import graft.operators.{Incremental, Staging, Upsert}
+import graft.sql.Lexer
+import graft.sql.Lexer.isWord
 
 /** SQL-statement MERGE — the reference's users write upserts as SQL
   * text (fx_pipeline_with_merge.py:90-104: `MERGE t USING s ON ...
@@ -66,39 +68,10 @@ object GraftSql {
     * `CREATE TABLE ... AS SELECT` → [[createTableAs]]. A migrating
     * BigQuery user feeds their load scripts here unchanged.
     */
-  /** Remove SQL comments — quote-aware: `--` to end-of-line, and
-    * slash-star block comments — BEFORE the textual dialect rewrites.
-    * Every scanner below is quote-aware but none is comment-aware, so
-    * a keyword inside a comment (`-- use QUALIFY here`) would
-    * otherwise trigger a rewrite. Comments carry no statement
-    * semantics; stripping once keeps every rewrite comment-safe.
-    * Newlines survive line comments (line-anchored text stays
-    * line-anchored), block comments become one space (token
-    * separation).
-    */
-  private[graft] def stripSqlComments(sql: String): String = {
-    val out = new StringBuilder(sql.length)
-    var i = 0; var inS = false; var inT = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inS) { out += c; if (c == '\'') inS = false; i += 1 }
-      else if (inT) { out += c; if (c == '`') inT = false; i += 1 }
-      else if (c == '\'') { out += c; inS = true; i += 1 }
-      else if (c == '`') { out += c; inT = true; i += 1 }
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2)
-        require(e >= 0, "unterminated /* comment */ in statement")
-        out += ' '
-        i = e + 2
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
-
   def load(spark: SparkSession, sql00: String): DataFrame = {
-    val sql0 = stripSqlComments(sql00)
+    // comments carry no statement semantics; hints stay (they steer
+    // the plan) and every pass skips them as opaque text
+    val sql0 = Lexer.stripComments(sql00)
     // native-expression SQL spellings (COSINE_DISTANCE etc.) — cheap,
     // idempotent, and statements must see them whatever session the
     // caller built
@@ -134,17 +107,36 @@ object GraftSql {
     }
   }
 
+  /** The textual dialect passes `load` applies before dispatch, in
+    * order. Time travel and VECTOR_SEARCH resolve before the function
+    * rewrites so every statement class (SELECT, INSERT ... SELECT,
+    * EXPORT) can use them, time travel first so a TVF's TABLE
+    * argument may itself be an AS OF reference.
+    */
+  private[graft] def passes(spark: SparkSession): Seq[(String, String => String)] = Seq(
+    "pipes" -> (graft.sql.Pipes.rewritePipes(_)),
+    "timeTravel" -> (rewriteTimeTravel(spark, _)),
+    "wildcardTables" -> (rewriteWildcardTables(spark, _)),
+    "changeTvf" -> (rewriteChangeTvf(spark, _)),
+    "gapFillTvf" -> (rewriteGapFillTvf(spark, _)),
+    "rangeSessionizeTvf" -> (rewriteRangeSessionizeTvf(spark, _)),
+    "vectorSearch" -> (rewriteVectorSearch(spark, _)),
+    "mlPredict" -> (graft.sql.Models.rewriteMlPredict(spark, _)),
+    "informationSchema" -> (rewriteInformationSchema(spark, _)),
+    "tableSample" -> (rewriteTableSample(_)),
+    "starReplace" -> (rewriteStarReplace(_)),
+    "jsonArrayFns" -> (graft.sql.Functions.rewriteJsonArrayFns(_)),
+    "generateFns" -> (graft.sql.Functions.rewriteGenerateFns(_)),
+    "bqFunctions" -> (graft.sql.Functions.rewriteBqFunctions(_)),
+    "arraySubquery" -> (rewriteArraySubquery(_)),
+    "scalarUnnestSubquery" -> (rewriteScalarUnnestSubquery(_)),
+    "unnest" -> (graft.sql.Functions.rewriteUnnest(_)),
+    "qualify" -> (rewriteQualify(_)),
+    "mlScaler" -> (graft.sql.Models.rewriteMlScaler(_)),
+    "windowRefinement" -> (rewriteWindowRefinement(_)))
+
   private def loadDispatch(spark: SparkSession, sql0: String): DataFrame = {
-    // BigQuery time travel + VECTOR_SEARCH: resolve `t FOR
-    // SYSTEM_TIME AS OF <ts>` references against registered Versioned
-    // tables and VECTOR_SEARCH(...) table-function calls BEFORE
-    // dispatch, so every statement class (SELECT, INSERT ... SELECT,
-    // EXPORT) can use them — time travel first, so a TVF's TABLE
-    // argument may itself be an AS OF reference
-    val sql = rewriteWindowRefinement(graft.sql.Models.rewriteMlScaler(rewriteQualify(graft.sql.Functions.rewriteUnnest(rewriteScalarUnnestSubquery(rewriteArraySubquery(graft.sql.Functions.rewriteBqFunctions(graft.sql.Functions.rewriteGenerateFns(graft.sql.Functions.rewriteJsonArrayFns(
-      rewriteStarReplace(rewriteTableSample(rewriteInformationSchema(spark,
-        graft.sql.Models.rewriteMlPredict(spark, rewriteVectorSearch(spark, rewriteRangeSessionizeTvf(spark, rewriteGapFillTvf(spark, rewriteChangeTvf(spark,
-          rewriteWildcardTables(spark, rewriteTimeTravel(spark, graft.sql.Pipes.rewritePipes(sql0))))))))))))))))))))
+    val sql = passes(spark).foldLeft(sql0) { case (text, (_, pass)) => pass(text) }
     // ASSERT is a BigQuery scripting verb Catalyst cannot parse —
     // recognize it before parsePlan so load scripts run unchanged;
     // it produces no result set, so a passing assertion yields the
@@ -312,34 +304,13 @@ object GraftSql {
     * queries in full).
     */
   private[graft] def rewriteWindowRefinement(sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    if (!upper.contains("WINDOW")) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
+    if (!sql.toUpperCase(java.util.Locale.ROOT).contains("WINDOW")) return sql
     // (partition-by, order-by, frame) thirds of a window spec body;
     // loud on leading garbage so a half-parsed refinement can't land
     def splitSpec(spec: String, what: String): (String, String, String) = {
-      val up = spec.toUpperCase(java.util.Locale.ROOT)
-      def topIdx(kw: String): Int = {
-        var i = 0; var depth = 0; var s = false; var t = false
-        while (i < spec.length) {
-          val c = spec.charAt(i)
-          if (s) { if (c == '\'') s = false }
-          else if (t) { if (c == '`') t = false }
-          else if (c == '\'') s = true
-          else if (c == '`') t = true
-          else if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          else if (depth == 0 && up.startsWith(kw, i) &&
-            (i == 0 || !isWord(spec.charAt(i - 1))) &&
-            (i + kw.length >= spec.length || !isWord(spec.charAt(i + kw.length))))
-            return i
-          i += 1
-        }
-        -1
-      }
-      val pi = topIdx("PARTITION")
-      val oi = topIdx("ORDER")
-      val fi = Seq(topIdx("ROWS"), topIdx("RANGE"), topIdx("GROUPS"))
+      val pi = Lexer.topWord(spec, "PARTITION")
+      val oi = Lexer.topWord(spec, "ORDER")
+      val fi = Seq("ROWS", "RANGE", "GROUPS").map(Lexer.topWord(spec, _))
         .filter(_ >= 0).sorted.headOption.getOrElse(-1)
       val marks = Seq(pi, oi, fi).filter(_ >= 0).sorted
       val first = marks.headOption.getOrElse(spec.length)
@@ -356,163 +327,120 @@ object GraftSql {
     // OVER-body spans already folded (several WINDOW clauses in one
     // statement must not re-replace the same inline site)
     val inlineDone = scala.collection.mutable.Set.empty[Int]
-    var i = 0; var inS = false; var inT = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inS) { if (c == '\'') inS = false; i += 1 }
-      else if (inT) { if (c == '`') inT = false; i += 1 }
-      else if (c == '\'') { inS = true; i += 1 }
-      else if (c == '`') { inT = true; i += 1 }
-      else if (upper.startsWith("WINDOW", i) &&
-        (i == 0 || !isWord(sql.charAt(i - 1))) &&
-        (i + 6 >= sql.length || !isWord(sql.charAt(i + 6)))) {
-        // try to parse `name AS ( ... ) [, ...]` after the keyword —
-        // anything else means WINDOW was an identifier; keep scanning
-        var j = i + 6
-        val defs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-        val spans = scala.collection.mutable.ListBuffer.empty[(String, Int, Int)]
-        var ok = true; var more = true
-        while (ok && more) {
-          while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-          // window name: bare identifier or backticked
-          val nameStart = j
-          if (j < sql.length && sql.charAt(j) == '`') {
-            j += 1; while (j < sql.length && sql.charAt(j) != '`') j += 1
-            if (j < sql.length) j += 1 else ok = false
-          } else {
-            while (j < sql.length && isWord(sql.charAt(j))) j += 1
-          }
-          val name = sql.substring(nameStart, j)
-          if (name.isEmpty) ok = false
-          if (ok) {
-            while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-            if (j + 2 <= sql.length && upper.startsWith("AS", j) &&
-              (j + 2 >= sql.length || !isWord(sql.charAt(j + 2)))) j += 2
-            else ok = false
-          }
-          if (ok) {
-            while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-            if (j < sql.length && sql.charAt(j) == '(') {
-              val open = j
-              var depth = 0; var s = false; var t = false
-              while (j < sql.length && (depth > 0 || j == open)) {
-                val ch = sql.charAt(j)
-                if (s) { if (ch == '\'') s = false }
-                else if (t) { if (ch == '`') t = false }
-                else if (ch == '\'') s = true
-                else if (ch == '`') t = true
-                else if (ch == '(') depth += 1
-                else if (ch == ')') depth -= 1
-                j += 1
+    var i = Lexer.indexOfWord(sql, "WINDOW")
+    while (i >= 0) {
+      // try to parse `name AS ( ... ) [, ...]` after the keyword —
+      // anything else means WINDOW was an identifier; keep scanning
+      var j = i + 6
+      val defs = scala.collection.mutable.LinkedHashMap.empty[String, String]
+      val spans = scala.collection.mutable.ListBuffer.empty[(String, Int, Int)]
+      var ok = true; var more = true
+      while (ok && more) {
+        j = Lexer.skipSpace(sql, j)
+        // window name: bare identifier or backticked
+        val nameStart = j
+        if (j < sql.length && sql.charAt(j) == '`') {
+          ok = Lexer.closed(sql, j); j = Lexer.opaqueEnd(sql, j)
+        } else {
+          while (j < sql.length && isWord(sql.charAt(j))) j += 1
+        }
+        val name = sql.substring(nameStart, j)
+        if (name.isEmpty) ok = false
+        if (ok) {
+          j = Lexer.skipSpace(sql, j)
+          if (Lexer.wordAt(sql, "AS", j)) j += 2
+          else ok = false
+        }
+        if (ok) {
+          j = Lexer.skipSpace(sql, j)
+          val close = if (j < sql.length && sql.charAt(j) == '(') Lexer.closeParen(sql, j) else -1
+          if (close >= 0) {
+            val open = j
+            j = close + 1
+            val key = name.stripPrefix("`").stripSuffix("`")
+              .toLowerCase(java.util.Locale.ROOT)
+            defs(key) = sql.substring(open + 1, close)
+            spans += ((key, open + 1, close))
+            val k = Lexer.skipSpace(sql, j)
+            if (k < sql.length && sql.charAt(k) == ',') { j = k + 1 }
+            else more = false
+          } else ok = false
+        }
+      }
+      if (spans.nonEmpty && ok) {
+        // fold refinements left-to-right through the merged text
+        val HeadIdent = """(?s)^\s*(`[^`]+`|[A-Za-z_]\w*)\s*(.*)$""".r
+        spans.foreach { case (key, bs, be) =>
+          val body = defs(key)
+          body match {
+            case HeadIdent(tok0, rest) =>
+              val tok = tok0.stripPrefix("`").stripSuffix("`")
+                .toLowerCase(java.util.Locale.ROOT)
+              if (!frameKw(tok.toUpperCase(java.util.Locale.ROOT)) && tok != key) {
+                require(defs.contains(tok) && defs.keysIterator.indexOf(tok) <
+                  defs.keysIterator.indexOf(key),
+                  s"window $key references '$tok0', which is not a window defined " +
+                    "EARLIER in the same WINDOW clause (BigQuery's refinement rule)")
+                val (p1, o1, f1) = splitSpec(defs(tok), s"base $tok0")
+                val (p2, o2, f2) = splitSpec(rest, s"refinement $key")
+                require(p2.isEmpty,
+                  s"window $key cannot redefine PARTITION BY — it inherits $tok0's")
+                require(o2.isEmpty || o1.isEmpty,
+                  s"window $key cannot add ORDER BY: base $tok0 already has one")
+                require(f1.isEmpty,
+                  s"window $key cannot refine $tok0: a refined base must not have " +
+                    "a frame clause")
+                val merged = Seq(p1, if (o2.nonEmpty) o2 else o1, f2)
+                  .filter(_.nonEmpty).mkString(" ")
+                defs(key) = merged
+                replacements += ((bs, be, merged))
               }
-              if (depth == 0) {
-                val key = name.stripPrefix("`").stripSuffix("`")
-                  .toLowerCase(java.util.Locale.ROOT)
-                defs(key) = sql.substring(open + 1, j - 1)
-                spans += ((key, open + 1, j - 1))
-                var k = j
-                while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
-                if (k < sql.length && sql.charAt(k) == ',') { j = k + 1 }
-                else more = false
-              } else ok = false
-            } else ok = false
+            case _ => // empty or keyword-led spec: plain definition
           }
         }
-        if (spans.nonEmpty && ok) {
-          // fold refinements left-to-right through the merged text
-          val HeadIdent = """(?s)^\s*(`[^`]+`|[A-Za-z_]\w*)\s*(.*)$""".r
-          spans.foreach { case (key, bs, be) =>
-            val body = defs(key)
-            body match {
-              case HeadIdent(tok0, rest) =>
-                val tok = tok0.stripPrefix("`").stripSuffix("`")
-                  .toLowerCase(java.util.Locale.ROOT)
-                if (!frameKw(tok.toUpperCase(java.util.Locale.ROOT)) && tok != key) {
-                  require(defs.contains(tok) && defs.keysIterator.indexOf(tok) <
-                    defs.keysIterator.indexOf(key),
-                    s"window $key references '$tok0', which is not a window defined " +
-                      "EARLIER in the same WINDOW clause (BigQuery's refinement rule)")
-                  val (p1, o1, f1) = splitSpec(defs(tok), s"base $tok0")
-                  val (p2, o2, f2) = splitSpec(rest, s"refinement $key")
-                  require(p2.isEmpty,
-                    s"window $key cannot redefine PARTITION BY — it inherits $tok0's")
-                  require(o2.isEmpty || o1.isEmpty,
-                    s"window $key cannot add ORDER BY: base $tok0 already has one")
-                  require(f1.isEmpty,
-                    s"window $key cannot refine $tok0: a refined base must not have " +
-                      "a frame clause")
-                  val merged = Seq(p1, if (o2.nonEmpty) o2 else o1, f2)
-                    .filter(_.nonEmpty).mkString(" ")
-                  defs(key) = merged
-                  replacements += ((bs, be, merged))
-                }
-              case _ => // empty or keyword-led spec: plain definition
+        // inline `OVER (w ORDER BY ... / frame)` refinement: scan
+        // every OVER site; a body opening with a name defined in
+        // THIS clause's defs merges with the (already-folded) base
+        // under the same composition rules. Bare `OVER (w)` is
+        // native Spark — only a non-empty tail is a refinement.
+        var k = Lexer.indexOfWord(sql, "OVER")
+        while (k >= 0) {
+          var j2 = Lexer.skipSpace(sql, k + 4)
+          if (j2 < sql.length && sql.charAt(j2) == '(' && !inlineDone(j2)) {
+            val open = j2
+            j2 = Lexer.closeParen(sql, open) + 1
+            if (j2 > 0) {
+              val body = sql.substring(open + 1, j2 - 1)
+              body match {
+                case HeadIdent(tok0, rest) if rest.trim.nonEmpty =>
+                  val tok = tok0.stripPrefix("`").stripSuffix("`")
+                    .toLowerCase(java.util.Locale.ROOT)
+                  if (!frameKw(tok.toUpperCase(java.util.Locale.ROOT)) &&
+                    defs.contains(tok)) {
+                    val (p1, o1, f1) = splitSpec(defs(tok), s"base $tok0")
+                    val (p2, o2, f2) = splitSpec(rest, s"inline refinement of $tok0")
+                    require(p2.isEmpty,
+                      s"OVER ($tok0 ...) cannot redefine PARTITION BY — it " +
+                        s"inherits $tok0's")
+                    require(o2.isEmpty || o1.isEmpty,
+                      s"OVER ($tok0 ...) cannot add ORDER BY: base $tok0 " +
+                        "already has one")
+                    require(f1.isEmpty,
+                      s"OVER ($tok0 ...) cannot refine $tok0: a refined base " +
+                        "must not have a frame clause")
+                    val merged = Seq(p1, if (o2.nonEmpty) o2 else o1, f2)
+                      .filter(_.nonEmpty).mkString(" ")
+                    replacements += ((open + 1, j2 - 1, merged))
+                    inlineDone += open
+                  }
+                case _ =>
+              }
             }
           }
-          // inline `OVER (w ORDER BY ... / frame)` refinement: scan
-          // every OVER site; a body opening with a name defined in
-          // THIS clause's defs merges with the (already-folded) base
-          // under the same composition rules. Bare `OVER (w)` is
-          // native Spark — only a non-empty tail is a refinement.
-          var k = 0; var kS = false; var kT = false
-          while (k < sql.length) {
-            val ch = sql.charAt(k)
-            if (kS) { if (ch == '\'') kS = false; k += 1 }
-            else if (kT) { if (ch == '`') kT = false; k += 1 }
-            else if (ch == '\'') { kS = true; k += 1 }
-            else if (ch == '`') { kT = true; k += 1 }
-            else if (upper.startsWith("OVER", k) &&
-              (k == 0 || !isWord(sql.charAt(k - 1))) &&
-              (k + 4 >= sql.length || !isWord(sql.charAt(k + 4)))) {
-              var j2 = k + 4
-              while (j2 < sql.length && Character.isWhitespace(sql.charAt(j2))) j2 += 1
-              if (j2 < sql.length && sql.charAt(j2) == '(' && !inlineDone(j2)) {
-                val open = j2
-                var depth = 0; var s = false; var t = false
-                while (j2 < sql.length && (depth > 0 || j2 == open)) {
-                  val c2 = sql.charAt(j2)
-                  if (s) { if (c2 == '\'') s = false }
-                  else if (t) { if (c2 == '`') t = false }
-                  else if (c2 == '\'') s = true
-                  else if (c2 == '`') t = true
-                  else if (c2 == '(') depth += 1
-                  else if (c2 == ')') depth -= 1
-                  j2 += 1
-                }
-                if (depth == 0) {
-                  val body = sql.substring(open + 1, j2 - 1)
-                  body match {
-                    case HeadIdent(tok0, rest) if rest.trim.nonEmpty =>
-                      val tok = tok0.stripPrefix("`").stripSuffix("`")
-                        .toLowerCase(java.util.Locale.ROOT)
-                      if (!frameKw(tok.toUpperCase(java.util.Locale.ROOT)) &&
-                        defs.contains(tok)) {
-                        val (p1, o1, f1) = splitSpec(defs(tok), s"base $tok0")
-                        val (p2, o2, f2) = splitSpec(rest, s"inline refinement of $tok0")
-                        require(p2.isEmpty,
-                          s"OVER ($tok0 ...) cannot redefine PARTITION BY — it " +
-                            s"inherits $tok0's")
-                        require(o2.isEmpty || o1.isEmpty,
-                          s"OVER ($tok0 ...) cannot add ORDER BY: base $tok0 " +
-                            "already has one")
-                        require(f1.isEmpty,
-                          s"OVER ($tok0 ...) cannot refine $tok0: a refined base " +
-                            "must not have a frame clause")
-                        val merged = Seq(p1, if (o2.nonEmpty) o2 else o1, f2)
-                          .filter(_.nonEmpty).mkString(" ")
-                        replacements += ((open + 1, j2 - 1, merged))
-                        inlineDone += open
-                      }
-                    case _ =>
-                  }
-                }
-              }
-              k += 4
-            } else k += 1
-          }
+          k = Lexer.indexOfWord(sql, "OVER", k + 4)
         }
-        i += 6
-      } else i += 1
+      }
+      i = Lexer.indexOfWord(sql, "WINDOW", i + 6)
     }
     if (replacements.isEmpty) sql
     else {
@@ -555,66 +483,39 @@ object GraftSql {
   }
 
   private def rewriteOneQualify(sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    if (!upper.contains("QUALIFY")) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    def isKw(kw: String, i: Int): Boolean =
-      upper.startsWith(kw, i) && (i == 0 || !isWord(sql.charAt(i - 1))) &&
-        (i + kw.length >= sql.length || !isWord(sql.charAt(i + kw.length)))
-    // one quote-aware scan: deepest QUALIFY token + its paren stack
+    if (!sql.toUpperCase(java.util.Locale.ROOT).contains("QUALIFY")) return sql
+    def isKw(kw: String, i: Int): Boolean = Lexer.wordAt(sql, kw, i)
+    // one scan: deepest QUALIFY token + its paren stack
     var best = -1; var bestStack: List[Int] = Nil
     val stack = scala.collection.mutable.Stack.empty[Int]
-    var i = 0; var inS = false; var inT = false
+    var i = 0
     while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else if (inT) { if (c == '`') inT = false }
-      else if (c == '\'') inS = true
-      else if (c == '`') inT = true
-      else if (c == '(') stack.push(i)
-      else if (c == ')') { if (stack.nonEmpty) stack.pop() }
-      else if (isKw("QUALIFY", i) && stack.size >= (if (best < 0) 0 else bestStack.size)) {
-        best = i; bestStack = stack.toList
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) i = e
+      else {
+        val c = sql.charAt(i)
+        if (c == '(') stack.push(i)
+        else if (c == ')') { if (stack.nonEmpty) stack.pop() }
+        else if (isKw("QUALIFY", i) && stack.size >= (if (best < 0) 0 else bestStack.size)) {
+          best = i; bestStack = stack.toList
+        }
+        i += 1
       }
-      i += 1
     }
     if (best < 0) return sql
     val regionStart = bestStack.headOption.map(_ + 1).getOrElse(0)
+    // matching close paren of the innermost enclosing open
     val regionEnd = bestStack.headOption.map { open =>
-      // matching close paren of the innermost enclosing open
-      var depth = 1; var j = open + 1; var s = false; var t = false
-      while (j < sql.length && depth > 0) {
-        val ch = sql.charAt(j)
-        if (s) { if (ch == '\'') s = false }
-        else if (t) { if (ch == '`') t = false }
-        else if (ch == '\'') s = true
-        else if (ch == '`') t = true
-        else if (ch == '(') depth += 1
-        else if (ch == ')') depth -= 1
-        j += 1
-      }
-      j - 1
+      val close = Lexer.closeParen(sql, open)
+      require(close >= 0, "unbalanced parentheses around QUALIFY")
+      close
     }.getOrElse(sql.length)
-    // within the region: positions at region depth 0
-    def depthScan(from: Int, until: Int)(f: (Int, Int) => Unit): Unit = {
-      var d = 0; var j = from; var s = false; var t = false
-      while (j < until) {
-        val ch = sql.charAt(j)
-        if (s) { if (ch == '\'') s = false }
-        else if (t) { if (ch == '`') t = false }
-        else if (ch == '\'') s = true
-        else if (ch == '`') t = true
-        else if (ch == '(') d += 1
-        else if (ch == ')') d -= 1
-        else f(j, d)
-        j += 1
-      }
-    }
     var selectPos = -1
-    depthScan(regionStart, best)((j, d) => if (d == 0 && isKw("SELECT", j)) selectPos = j)
+    Lexer.foreachCode(sql, regionStart, best)((j, d) =>
+      if (d == 0 && isKw("SELECT", j)) selectPos = j)
     require(selectPos >= 0, "QUALIFY without an owning SELECT")
     var fromPos = -1
-    depthScan(selectPos, best)((j, d) =>
+    Lexer.foreachCode(sql, selectPos, best)((j, d) =>
       if (d == 0 && fromPos < 0 && isKw("FROM", j)) fromPos = j)
     require(fromPos >= 0, "QUALIFY requires a FROM clause")
     // loud scopes: DISTINCT head, GROUP BY ALL
@@ -623,7 +524,7 @@ object GraftSql {
       "SELECT DISTINCT ... QUALIFY is not supported — the predicate column would " +
         "change the distinct key set; QUALIFY in a subquery, DISTINCT outside")
     var groupByAll = false
-    depthScan(fromPos, best)((j, d) =>
+    Lexer.foreachCode(sql, fromPos, best)((j, d) =>
       if (d == 0 && isKw("GROUP", j)) {
         val rest = sql.substring(j, math.min(sql.length, j + 40))
           .toUpperCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
@@ -640,7 +541,7 @@ object GraftSql {
     val predStart = best + 7
     var predEnd = regionEnd
     var windowStart = -1
-    depthScan(predStart, regionEnd)((j, d) =>
+    Lexer.foreachCode(sql, predStart, regionEnd)((j, d) =>
       if (d == 0 && predEnd == regionEnd &&
         (sql.charAt(j) == ';' ||
           isKw("WINDOW", j) || isKw("ORDER", j) || isKw("LIMIT", j) ||
@@ -655,7 +556,7 @@ object GraftSql {
     var windowEnd = windowStart
     if (windowStart >= 0) {
       windowEnd = regionEnd
-      depthScan(windowStart + 6, regionEnd)((j, d) =>
+      Lexer.foreachCode(sql, windowStart + 6, regionEnd)((j, d) =>
         if (d == 0 && windowEnd == regionEnd &&
           (sql.charAt(j) == ';' ||
             isKw("ORDER", j) || isKw("LIMIT", j) || isKw("UNION", j) ||
@@ -673,71 +574,24 @@ object GraftSql {
   private[graft] def rewriteStarReplace(sql0: String): String = {
     val upper = sql0.toUpperCase(java.util.Locale.ROOT)
     if (!upper.contains("REPLACE")) return sql0
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    def splitTop(text: String): Seq[String] = {
-      val items = scala.collection.mutable.ListBuffer.empty[String]
-      var start = 0; var depth = 0; var s = false; var t = false; var i = 0
-      while (i < text.length) {
-        val c = text.charAt(i)
-        if (s) { if (c == '\'') s = false }
-        else if (t) { if (c == '`') t = false }
-        else if (c == '\'') s = true
-        else if (c == '`') t = true
-        else if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ',' && depth == 0) { items += text.substring(start, i).trim; start = i + 1 }
-        i += 1
-      }
-      items += text.substring(start).trim
-      items.toSeq
-    }
     // last top-level word-bounded AS in an item → (expr, name)
     def parseItem(item: String): (String, String) = {
-      var lastAs = -1
-      var i = 0; var depth = 0; var s = false; var t = false
-      val up = item.toUpperCase(java.util.Locale.ROOT)
-      while (i < item.length) {
-        val c = item.charAt(i)
-        if (s) { if (c == '\'') s = false }
-        else if (t) { if (c == '`') t = false }
-        else if (c == '\'') s = true
-        else if (c == '`') t = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'A' || c == 'a') && up.startsWith("AS", i) &&
-          (i == 0 || !isWord(item.charAt(i - 1))) &&
-          (i + 2 >= item.length || !isWord(item.charAt(i + 2)))) lastAs = i
-        i += 1
-      }
+      val lastAs = Lexer.lastTopWord(item, "AS")
       require(lastAs > 0, s"* REPLACE item needs `expr AS name`: $item")
       (item.substring(0, lastAs).trim, item.substring(lastAs + 2).trim)
     }
-    // balanced-paren capture starting at an opening paren
-    // (quote-aware for BOTH '…' strings and `…` identifiers — a
-    // backticked name containing parens must not move the depth)
+    // one past the paren closing the one at `open`
     def captureParen(sql: String, open: Int): Int = {
-      var depth = 1; var r = open + 1; var s = false; var t = false
-      while (r < sql.length && depth > 0) {
-        val ch = sql.charAt(r)
-        if (s) { if (ch == '\'') s = false }
-        else if (t) { if (ch == '`') t = false }
-        else if (ch == '\'') s = true
-        else if (ch == '`') t = true
-        else if (ch == '(') depth += 1
-        else if (ch == ')') depth -= 1
-        r += 1
-      }
-      require(depth == 0, "* REPLACE: unbalanced parens")
-      r // one past the closing paren
+      val close = Lexer.closeParen(sql, open)
+      require(close >= 0, "* REPLACE: unbalanced parens")
+      close + 1
     }
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     while (i < sql0.length) {
       val c = sql0.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(sql0, i)
+      if (e > i) { out ++= sql0.substring(i, e); i = e }
       else if (c == '*') {
         val t2 = out.toString.reverse.dropWhile(_.isWhitespace).reverse
         val starPosition = t2.nonEmpty && {
@@ -752,33 +606,29 @@ object GraftSql {
         if (!starPosition) { out += c; i += 1 }
         else {
           // optional EXCEPT (...) then REPLACE (...)
-          var p = i + 1
-          while (p < sql0.length && Character.isWhitespace(sql0.charAt(p))) p += 1
+          val p = Lexer.skipSpace(sql0, i + 1)
           var exceptRaw = ""
           var exceptEnd = -1
           if (upper.startsWith("EXCEPT", p) &&
             (p + 6 >= sql0.length || !isWord(sql0.charAt(p + 6)))) {
-            var q = p + 6
-            while (q < sql0.length && Character.isWhitespace(sql0.charAt(q))) q += 1
+            val q = Lexer.skipSpace(sql0, p + 6)
             if (q < sql0.length && sql0.charAt(q) == '(') {
               val e = captureParen(sql0, q)
               exceptRaw = sql0.substring(q + 1, e - 1).trim
               exceptEnd = e
             }
           }
-          var rp = if (exceptEnd >= 0) exceptEnd else i + 1
-          while (rp < sql0.length && Character.isWhitespace(sql0.charAt(rp))) rp += 1
+          val rp = Lexer.skipSpace(sql0, if (exceptEnd >= 0) exceptEnd else i + 1)
           val hasReplace = upper.startsWith("REPLACE", rp) &&
             (rp + 7 >= sql0.length || !isWord(sql0.charAt(rp + 7))) && {
-              var q = rp + 7
-              while (q < sql0.length && Character.isWhitespace(sql0.charAt(q))) q += 1
+              val q = Lexer.skipSpace(sql0, rp + 7)
               q < sql0.length && sql0.charAt(q) == '('
             }
           if (!hasReplace) { out += c; i += 1 }
           else {
             val open = sql0.indexOf('(', rp + 7)
             val end = captureParen(sql0, open)
-            val items = splitTop(sql0.substring(open + 1, end - 1)).map(parseItem)
+            val items = Lexer.splitTop(sql0.substring(open + 1, end - 1)).map(parseItem)
             require(items.nonEmpty, "* REPLACE needs at least one `expr AS name` item")
             val names = items.map(_._2)
             val exceptList = (if (exceptRaw.nonEmpty) Seq(exceptRaw) else Nil) ++ names
@@ -806,27 +656,18 @@ object GraftSql {
   private[graft] def rewriteTableSample(sql: String): String = {
     if (!sql.toUpperCase(java.util.Locale.ROOT).contains("TABLESAMPLE")) return sql
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
-      else if ((c == 'T' || c == 't') && sql.regionMatches(true, i, "TABLESAMPLE", 0, 11) &&
-        (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1))) &&
-        (i + 11 >= sql.length || !Character.isLetterOrDigit(sql.charAt(i + 11)))) {
-        out ++= sql.substring(i, i + 11)
-        i += 11
-        var j = i
-        while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
-        if (sql.regionMatches(true, j, "SYSTEM", 0, 6) &&
-          (j + 6 >= sql.length || !Character.isLetterOrDigit(sql.charAt(j + 6)))) {
-          out += ' '
-          i = j + 6 // drop the SYSTEM token, keep one space
-        }
-      } else { out += c; i += 1 }
+    var from = 0
+    var i = Lexer.indexOfWord(sql, "TABLESAMPLE")
+    while (i >= 0) {
+      val j = Lexer.skipSpace(sql, i + 11)
+      if (Lexer.wordAt(sql, "SYSTEM", j)) {
+        // drop the SYSTEM token, keep one space
+        out ++= sql.substring(from, i + 11) += ' '
+        from = j + 6
+      }
+      i = Lexer.indexOfWord(sql, "TABLESAMPLE", i + 11)
     }
+    out ++= sql.substring(from)
     out.toString
   }
 
@@ -847,14 +688,9 @@ object GraftSql {
       "not an ASSERT statement")
     val body = t.substring(6).trim
     val Lit = """(?s)\s*'((?:[^']|'')*)'\s*""".r
-    var inQ = false
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\'') inQ = !inQ
-      else if (!inQ && (c == 'A' || c == 'a') && i > 0 &&
-          Character.isWhitespace(body.charAt(i - 1)) && i + 2 < body.length &&
-          (body.charAt(i + 1) == 'S' || body.charAt(i + 1) == 's') &&
+    var i = Lexer.indexOfWord(body, "AS")
+    while (i >= 0) {
+      if (i > 0 && Character.isWhitespace(body.charAt(i - 1)) && i + 2 < body.length &&
           Character.isWhitespace(body.charAt(i + 2))) {
         body.substring(i + 2) match {
           case Lit(msg) =>
@@ -862,7 +698,7 @@ object GraftSql {
           case _ => () // AS not followed by a literal-to-end (e.g. CAST(x AS INT))
         }
       }
-      i += 1
+      i = Lexer.indexOfWord(body, "AS", i + 2)
     }
     (body, None)
   }
@@ -973,35 +809,14 @@ object GraftSql {
 
   /** OPTIONS(k='v', k2=true, ...) body → lowercase-keyed map; values
     * are SQL strings (with '' escapes), booleans, or bare numbers.
-    * One linear scan tracking quote state — a ',' or '=' inside a
-    * quoted value never splits.
+    * A ',' or '=' inside a quoted value never splits.
     */
-  private[graft] def parseOptions(body: String): Map[String, String] = {
-    val pairs = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\'') { inQuote = !inQuote; cur += c }
-      else if (c == ',' && !inQuote) { pairs += cur.toString; cur.clear() }
-      else cur += c
-      i += 1
-    }
-    require(!inQuote, s"unterminated string in OPTIONS: $body")
-    if (cur.nonEmpty) pairs += cur.toString
-    pairs.filter(_.trim.nonEmpty).map { p =>
-      val eq = p.indexOf('=')
-      require(eq > 0, s"OPTIONS entry is not key=value: '$p'")
-      val k = p.substring(0, eq).trim.toLowerCase
-      val raw = p.substring(eq + 1).trim
-      val v =
-        if (raw.startsWith("'") && raw.endsWith("'") && raw.length >= 2)
-          raw.substring(1, raw.length - 1).replace("''", "'")
-        else raw.toLowerCase
-      k -> v
+  private[graft] def parseOptions(body: String): Map[String, String] =
+    parseOptionPairs(body).map { case (k, raw) =>
+      k -> (if (raw.startsWith("'") && raw.endsWith("'") && raw.length >= 2)
+        raw.substring(1, raw.length - 1).replace("''", "'")
+      else raw.toLowerCase)
     }.toMap
-  }
 
   // ───────────── CREATE EXTERNAL TABLE ─────────────
 
@@ -1012,37 +827,20 @@ object GraftSql {
       """((?:`[^`]+`|[A-Za-z_][\w$]*)(?:\.(?:`[^`]+`|[A-Za-z_][\w$]*))*)\s*""" +
       """(?:\((.*?)\)\s*)?OPTIONS\s*\((.*)\)\s*;?\s*$""").r
 
-  /** Split the `uris = ['a', 'b']` list out of an OPTIONS body (its
-    * commas would otherwise split [[parseOptions]] pairs): one linear
-    * scan tracking quote state finds the bracketed span, which is
-    * removed from the scalar body and comma-split itself. Returns
-    * (body without the uris entry, uri list — empty when absent).
+  /** Split the `uris = ['a', 'b']` list out of an OPTIONS body: the
+    * bracketed span is removed from the scalar body and comma-split
+    * itself. Returns (body without the uris entry, uri list — empty
+    * when absent).
     */
   private def extractUris(body: String): (String, Seq[String]) = {
     val m = """(?is)(^|,)\s*uris\s*=\s*\[""".r.findFirstMatchIn(body) match {
       case None => return (body, Nil)
       case Some(x) => x
     }
-    var i = m.end // first char after '['
-    var inQuote = false
-    while (i < body.length && (inQuote || body.charAt(i) != ']')) {
-      if (body.charAt(i) == '\'') inQuote = !inQuote
-      i += 1
-    }
-    require(i < body.length, s"unterminated uris list in OPTIONS: $body")
-    val items = body.substring(m.end, i)
+    val i = Lexer.closeParen(body, m.end - 1)
+    require(i >= 0, s"unterminated uris list in OPTIONS: $body")
     val uris = {
-      val parts = scala.collection.mutable.ListBuffer.empty[String]
-      val cur = new StringBuilder
-      var q = false
-      items.foreach {
-        case '\'' => q = !q; cur += '\''
-        case ',' if !q => parts += cur.toString; cur.clear()
-        case c => cur += c
-      }
-      if (cur.toString.trim.nonEmpty) parts += cur.toString
-      parts.toSeq.map { raw =>
-        val t = raw.trim
+      Lexer.splitTop(body.substring(m.end, i)).map { t =>
         require(t.startsWith("'") && t.endsWith("'") && t.length >= 2,
           s"uris entries must be quoted strings, got: $t")
         t.substring(1, t.length - 1).replace("''", "'")
@@ -1300,24 +1098,11 @@ object GraftSql {
     */
   private def splitConstraintClauses(table: String, body: String)
       : (Seq[String], Seq[TableConstraint]) = {
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var q = false
-    body.foreach { ch =>
-      if (q) { cur += ch; if (ch == '\'') q = false }
-      else ch match {
-        case '\'' => q = true; cur += ch
-        case '(' | '<' | '[' => depth += 1; cur += ch
-        case ')' | '>' | ']' => depth -= 1; cur += ch
-        case ',' if depth == 0 => parts += cur.toString; cur.clear()
-        case other => cur += other
-      }
-    }
-    if (cur.toString.trim.nonEmpty) parts += cur.toString
+    val parts = Lexer.splitTop(body, angles = true)
     val cols = scala.collection.mutable.ListBuffer.empty[String]
     val cons = scala.collection.mutable.ListBuffer.empty[TableConstraint]
     var fkN = 0
-    parts.map(_.trim).filter(_.nonEmpty).foreach {
+    parts.filter(_.nonEmpty).foreach {
       case PkClauseRe(nm, colList, enforced) =>
         require(enforced != null && enforced.toUpperCase(java.util.Locale.ROOT).startsWith("NOT"),
           s"PRIMARY KEY on $table must be declared NOT ENFORCED (BigQuery's only mode)")
@@ -1690,16 +1475,8 @@ object GraftSql {
       // split `rest0` = "params) [RETURNS ...] AS body" at the
       // matching close paren (quote-aware; param defaults could carry
       // parens/commas inside)
-      var i = 0; var depth = 1; var inQ = false
-      while (i < rest0.length && depth > 0) {
-        val c = rest0.charAt(i)
-        if (inQ) { if (c == '\'') inQ = false }
-        else if (c == '\'') inQ = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        i += 1
-      }
-      require(depth == 0, s"CREATE FUNCTION $name: unbalanced parameter list")
+      val i = Lexer.closeParen("(" + rest0, 0)
+      require(i >= 0, s"CREATE FUNCTION $name: unbalanced parameter list")
       val params = rest0.substring(0, i - 1).trim
       var tail = rest0.substring(i).trim.stripSuffix(";").trim
       def checkClauses(text: String): Unit =
@@ -2673,76 +2450,32 @@ object GraftSql {
   }
 
   /** Split one top-level `OPTIONS ( ... )` clause out of a DDL
-    * statement — quote-, backtick- and balance-aware, and stopping at
-    * the first top-level `AS` keyword so an OPTIONS-shaped call inside
-    * the query body is never touched. Returns (sql without the clause,
-    * the raw body if one was found).
+    * statement, stopping at the first top-level `AS` keyword so an
+    * OPTIONS-shaped call inside the query body is never touched. Only
+    * a TOP-LEVEL clause is table metadata: a column-level OPTIONS(...)
+    * sits inside the column-list parens and must stay put (the schema
+    * splitter rejects it loudly). Returns (sql without the clause, the
+    * raw body if one was found).
     */
   private[graft] def splitOptionsClause(sql: String): (String, Option[String]) = {
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    var i = 0; var inStr = false; var inTick = false; var depth = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '`') { inTick = true; i += 1 }
-      // only a TOP-LEVEL clause is table metadata: a column-level
-      // OPTIONS(...) sits inside the column-list parens and must stay
-      // put (the schema splitter rejects it loudly)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth > 0) { i += 1 }
-      else if ((c == 'A' || c == 'a') && upper.startsWith("AS", i) &&
-        (i == 0 || !isWord(sql.charAt(i - 1))) &&
-        (i + 2 >= sql.length || !isWord(sql.charAt(i + 2)))) {
-        return (sql, None) // the query body starts — nothing before it
-      } else if ((c == 'O' || c == 'o') && upper.startsWith("OPTIONS", i) &&
-        (i == 0 || !isWord(sql.charAt(i - 1))) &&
-        (i + 7 >= sql.length || !isWord(sql.charAt(i + 7)))) {
-        var p = i + 7
-        while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-        if (p >= sql.length || sql.charAt(p) != '(') { i += 1 }
-        else {
-          var depth = 1; var q = p + 1; var s2 = false
-          while (q < sql.length && depth > 0) {
-            val ch = sql.charAt(q)
-            if (s2) { if (ch == '\'') s2 = false }
-            else if (ch == '\'') s2 = true
-            else if (ch == '(') depth += 1
-            else if (ch == ')') depth -= 1
-            q += 1
-          }
-          require(depth == 0, s"unbalanced OPTIONS(...) in: ${sql.take(80)}")
-          return (sql.substring(0, i) + sql.substring(q), Some(sql.substring(p + 1, q - 1)))
-        }
-      } else i += 1
+    def optionsAt(i: Int) = Lexer.wordAt(sql, "OPTIONS", i) &&
+      sql.startsWith("(", Lexer.skipSpace(sql, i + 7))
+    val i = Lexer.findTop(sql, 0, sql.length)(i => Lexer.wordAt(sql, "AS", i) || optionsAt(i))
+    if (i < 0 || !optionsAt(i)) (sql, None)
+    else {
+      val p = Lexer.skipSpace(sql, i + 7)
+      val q = Lexer.closeParen(sql, p)
+      require(q >= 0, s"unbalanced OPTIONS(...) in: ${sql.take(80)}")
+      (sql.substring(0, i) + sql.substring(q + 1), Some(sql.substring(p + 1, q)))
     }
-    (sql, None)
   }
 
-  /** OPTIONS body → ordered (key, raw value) pairs. Unlike
-    * [[parseOptions]] this split is BRACKET-aware: a labels list
+  /** OPTIONS body → ordered (key, raw value) pairs; a labels list
     * `labels=[('k','v'), ('k2','v2')]` keeps its inner commas.
     */
   private def parseOptionPairs(body: String): Seq[(String, String)] = {
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var q = false
-    body.foreach { c =>
-      if (q) { cur += c; if (c == '\'') q = false }
-      else c match {
-        case '\'' => q = true; cur += c
-        case '(' | '[' => depth += 1; cur += c
-        case ')' | ']' => depth -= 1; cur += c
-        case ',' if depth == 0 => parts += cur.toString; cur.clear()
-        case other => cur += other
-      }
-    }
-    require(!q, s"unterminated string in OPTIONS: $body")
-    if (cur.toString.trim.nonEmpty) parts += cur.toString
-    parts.toSeq.filter(_.trim.nonEmpty).map { p =>
+    require(Lexer.terminated(body), s"unterminated string in OPTIONS: $body")
+    Lexer.splitTop(body).filter(_.nonEmpty).map { p =>
       val eq = p.indexOf('=')
       require(eq > 0, s"OPTIONS entry is not key=value: '$p'")
       (p.substring(0, eq).trim.toLowerCase, p.substring(eq + 1).trim)
@@ -3068,22 +2801,12 @@ object GraftSql {
   }
 
   private[graft] def viewName(raw: String): String = {
-    // split on dots OUTSIDE backticks, unquote each part
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder; var inTick = false; var i = 0
-    while (i < raw.length) {
-      raw.charAt(i) match {
-        case '`' => inTick = !inTick
-        case '.' if !inTick => parts += cur.toString; cur.clear()
-        case c => cur += c
-      }
-      i += 1
-    }
-    parts += cur.toString
+    // split on dots OUTSIDE backticks, unquote the part
+    val parts = Lexer.splitTop(raw, '.')
     require(parts.length == 1,
       s"view names are single-part in this engine (temp catalog), got '$raw'; " +
         "dataset-qualified names belong to a real catalog deployment")
-    parts.head
+    parts.head.replace("`", "")
   }
 
   private def createMaterialized(spark: SparkSession, name: String, query: String,
@@ -3608,22 +3331,14 @@ object GraftSql {
 
   private[graft] def rewriteTimeTravel(spark: SparkSession, sql: String): String = {
     if (!sql.toUpperCase(java.util.Locale.ROOT).contains("SYSTEM_TIME")) return sql
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    // top-level match spans of FOR\s+SYSTEM_TIME\s+AS\s+OF, found by a
-    // quote-aware walk ('' escapes inside strings; backticks quote ids)
+    // match spans of FOR\s+SYSTEM_TIME\s+AS\s+OF in code
     val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '`') { inTick = true; i += 1 }
-      else if (c == 'F' || c == 'f') {
-        val m = TimeTravelRe.pattern.matcher(upper)
-        if (m.find(i) && m.start == i) { spans += ((m.start, m.end)); i = m.end }
-        else i += 1
-      } else i += 1
+    val m = TimeTravelRe.pattern.matcher(sql)
+    var i = Lexer.indexOfWord(sql, "FOR")
+    while (i >= 0) {
+      val hit = m.region(i, sql.length).lookingAt()
+      if (hit) spans += ((i, m.end))
+      i = Lexer.indexOfWord(sql, "FOR", if (hit) m.end else i + 3)
     }
     if (spans.isEmpty) return sql
     // rewrite right-to-left so earlier spans' indices stay valid
@@ -3647,21 +3362,18 @@ object GraftSql {
           out.substring(s, e + 1)
         }
       // forward: optional TIMESTAMP keyword, then a quoted literal
-      var p = end
-      while (p < out.length && Character.isWhitespace(out.charAt(p))) p += 1
+      var p = Lexer.skipSpace(out, end)
       if (p + 9 <= out.length &&
         out.substring(p, p + 9).equalsIgnoreCase("TIMESTAMP")) {
         p += 9
-        while (p < out.length && Character.isWhitespace(out.charAt(p))) p += 1
+        p = Lexer.skipSpace(out, p)
       }
       require(p < out.length && out.charAt(p) == '\'',
         s"FOR SYSTEM_TIME AS OF needs a literal timestamp (TIMESTAMP '...' or '...'); " +
           s"expressions are not evaluated here — inline the constant (table $name)")
-      val litStart = p + 1
-      var q = litStart
-      while (q < out.length && out.charAt(q) != '\'') q += 1
-      require(q < out.length, "unterminated timestamp literal after FOR SYSTEM_TIME AS OF")
-      val tsUs = parseTsLiteralUs(out.substring(litStart, q))
+      require(Lexer.closed(out, p), "unterminated timestamp literal after FOR SYSTEM_TIME AS OF")
+      val q = Lexer.opaqueEnd(out, p) - 1
+      val tsUs = parseTsLiteralUs(out.substring(p + 1, q))
       val path = graft.sources.Versioned.registeredPath(spark, name).getOrElse(
         throw new IllegalArgumentException(
           s"'$name' is not a registered versioned table — Versioned.register(spark, " +
@@ -3673,7 +3385,7 @@ object GraftSql {
     out
   }
 
-  private val TimeTravelRe = """FOR\s+SYSTEM_TIME\s+AS\s+OF""".r
+  private val TimeTravelRe = """(?i)FOR\s+SYSTEM_TIME\s+AS\s+OF""".r
 
   // ── BigQuery wildcard tables + _TABLE_SUFFIX ─────────────────────
 
@@ -3704,7 +3416,6 @@ object GraftSql {
     if (!sql.contains("*")) return sql
     val upper = sql.toUpperCase(java.util.Locale.ROOT)
     if (!upper.contains("FROM") && !upper.contains("JOIN")) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     // SQL has an EXPRESSION `FROM` keyword inside a closed set of
     // standard functions (`substring(s FROM n*2)`, `EXTRACT(x FROM
     // a*b)`, `TRIM(... FROM s)`, ...). A FROM at a paren depth opened
@@ -3721,13 +3432,11 @@ object GraftSql {
       if (e < 0 || b == e) "" else upper.substring(b + 1, e + 1)
     }
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) { out ++= sql.substring(i, e); i = e }
       else if (c == '(') { parenStack.push(exprFromFns(wordBefore(i))); out += c; i += 1 }
       else if (c == ')') { if (parenStack.nonEmpty) parenStack.pop(); out += c; i += 1 }
       else if (Character.isLetter(c) && (i == 0 || !isWord(sql.charAt(i - 1)))) {
@@ -3741,8 +3450,8 @@ object GraftSql {
             out += sql.charAt(i); i += 1
           }
           if (i < sql.length && sql.charAt(i) == '`') {
-            val close = sql.indexOf('`', i + 1)
-            require(close > 0, "unterminated backtick in table reference")
+            require(Lexer.closed(sql, i), "unterminated backtick in table reference")
+            val close = Lexer.opaqueEnd(sql, i) - 1
             val ref = sql.substring(i + 1, close)
             if (ref.contains("*")) out ++= wildcardView(spark, ref)
             else out ++= sql.substring(i, close + 1)
@@ -3808,39 +3517,11 @@ object GraftSql {
   // TABLE arg may be a versioned table AS OF rewritten first.
 
   private[graft] def rewriteVectorSearch(spark: SparkSession, sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    if (!upper.contains("VECTOR_SEARCH")) return sql
-    // top-level spans: (start, argStart, argEnd, end) of each
-    // VECTOR_SEARCH ( args ) call, via a quote-aware walk with
-    // balanced parens inside the args
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int)]
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '`') { inTick = true; i += 1 }
-      else if ((c == 'V' || c == 'v') && upper.startsWith("VECTOR_SEARCH", i) &&
-        (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1)) && sql.charAt(i - 1) != '_')) {
-        var p = i + "VECTOR_SEARCH".length
-        while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-        if (p < sql.length && sql.charAt(p) == '(') {
-          val argStart = p + 1
-          var depth = 1; var q = argStart; var s2 = false
-          while (q < sql.length && depth > 0) {
-            val ch = sql.charAt(q)
-            if (s2) { if (ch == '\'') s2 = false }
-            else if (ch == '\'') s2 = true
-            else if (ch == '(') depth += 1
-            else if (ch == ')') depth -= 1
-            if (depth > 0) q += 1
-          }
-          require(depth == 0, "unbalanced parentheses in VECTOR_SEARCH call")
-          spans += ((i, argStart, q, q + 1))
-          i = q + 1
-        } else i = p
-      } else i += 1
+    if (!sql.toUpperCase(java.util.Locale.ROOT).contains("VECTOR_SEARCH")) return sql
+    // (start, argStart, argEnd, end) of each VECTOR_SEARCH ( args ) call
+    val spans = Lexer.calls(sql, "VECTOR_SEARCH").map { case (i, open, q) =>
+      require(q >= 0, "unbalanced parentheses in VECTOR_SEARCH call")
+      (i, open + 1, q, q + 1)
     }
     if (spans.isEmpty) return sql
     var out = sql
@@ -3855,21 +3536,7 @@ object GraftSql {
 
   /** Parse a VECTOR_SEARCH argument list and run the search. */
   private def vectorSearchFromArgs(spark: SparkSession, argBody: String): DataFrame = {
-    // split top-level commas (quotes, parens, brackets aware)
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    argBody.foreach { c =>
-      if (inStr) { if (c == '\'') inStr = false; cur += c }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '(' | '[' => depth += 1; cur += c
-        case ')' | ']' => depth -= 1; cur += c
-        case ',' if depth == 0 => parts += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    if (cur.toString.trim.nonEmpty) parts += cur.toString
+    val parts = Lexer.splitTop(argBody)
     val TableRe = """(?is)^TABLE\s+(`[^`]+`|[A-Za-z_][\w$.]*)$""".r
     val StrRe = """(?s)^'(.*)'$""".r
     val NamedRe = """(?is)^([A-Za-z_]\w*)\s*=>\s*(.+)$""".r
@@ -3999,39 +3666,16 @@ object GraftSql {
   // reference outer row columns, as BigQuery's do.
 
   private[graft] def rewriteArraySubquery(sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '`') { inTick = true; i += 1 }
-      else if (upper.startsWith("ARRAY", i) &&
-        (i == 0 || !isWord(sql.charAt(i - 1)))) {
-        var p = i + 5
-        while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-        if (p < sql.length && sql.charAt(p) == '(') {
-          var q = p + 1
-          while (q < sql.length && Character.isWhitespace(sql.charAt(q))) q += 1
-          if (upper.startsWith("SELECT", q)) {
-            // balanced span of the subquery body
-            var depth = 1; var r = p + 1; var s2 = false
-            while (r < sql.length && depth > 0) {
-              val ch = sql.charAt(r)
-              if (s2) { if (ch == '\'') s2 = false }
-              else if (ch == '\'') s2 = true
-              else if (ch == '(') depth += 1
-              else if (ch == ')') depth -= 1
-              if (depth > 0) r += 1
-            }
-            require(depth == 0, "unbalanced parentheses in ARRAY(SELECT ...)")
-            val repl = arraySubqueryToHof(sql.substring(p + 1, r))
-            return rewriteArraySubquery(sql.substring(0, i) + repl + sql.substring(r + 1))
-          } else i = p
-        } else i = p
-      } else i += 1
+    var i = Lexer.indexOfWord(sql, "ARRAY")
+    while (i >= 0) {
+      val p = Lexer.skipSpace(sql, i + 5)
+      if (sql.startsWith("(", p) && Lexer.wordAt(sql, "SELECT", Lexer.skipSpace(sql, p + 1))) {
+        val r = Lexer.closeParen(sql, p)
+        require(r >= 0, "unbalanced parentheses in ARRAY(SELECT ...)")
+        val repl = arraySubqueryToHof(sql.substring(p + 1, r))
+        return rewriteArraySubquery(sql.substring(0, i) + repl + sql.substring(r + 1))
+      }
+      i = Lexer.indexOfWord(sql, "ARRAY", p)
     }
     sql
   }
@@ -4052,7 +3696,6 @@ object GraftSql {
 
   private[graft] def rewriteScalarUnnestSubquery(sql: String): String = {
     val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     def prevWord(at: Int): String = {
       var e = at - 1
       while (e >= 0 && Character.isWhitespace(sql.charAt(e))) e -= 1
@@ -4061,29 +3704,16 @@ object GraftSql {
       while (e >= 0 && isWord(sql.charAt(e))) e -= 1
       if (end < 0) "" else upper.substring(e + 1, end + 1)
     }
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '`') { inTick = true; i += 1 }
-      else if (c == '(') {
-        var q = i + 1
-        while (q < sql.length && Character.isWhitespace(sql.charAt(q))) q += 1
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) i = e
+      else if (sql.charAt(i) == '(') {
         val exists = prevWord(i) == "EXISTS"
-        if (upper.startsWith("SELECT", q) &&
+        if (upper.startsWith("SELECT", Lexer.skipSpace(sql, i + 1)) &&
           (exists || !Set("FROM", "JOIN", "UNNEST").contains(prevWord(i)))) {
-          var depth = 1; var r = i + 1; var s2 = false
-          while (r < sql.length && depth > 0) {
-            val ch = sql.charAt(r)
-            if (s2) { if (ch == '\'') s2 = false }
-            else if (ch == '\'') s2 = true
-            else if (ch == '(') depth += 1
-            else if (ch == ')') depth -= 1
-            if (depth > 0) r += 1
-          }
-          require(depth == 0, "unbalanced parentheses in subquery")
+          val r = Lexer.closeParen(sql, i)
+          require(r >= 0, "unbalanced parentheses in subquery")
           val body = sql.substring(i + 1, r)
           scalarUnnestToHof(body, exists) match {
             case Some(repl) =>
@@ -4107,25 +3737,8 @@ object GraftSql {
     */
   private def scalarUnnestToHof(body: String, exists: Boolean): Option[String] = {
     val upper = body.toUpperCase(java.util.Locale.ROOT)
-    def isW(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    def findTop(kw: String, from: Int): Int = {
-      var i = from; var depth = 0; var s = false
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (s) { if (c == '\'') s = false }
-        else if (c == '\'') s = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && upper.startsWith(kw, i) &&
-          (i == 0 || !isW(body.charAt(i - 1))) &&
-          (i + kw.length >= body.length || !isW(body.charAt(i + kw.length))))
-          return i
-        i += 1
-      }
-      -1
-    }
-    val selAt = findTop("SELECT", 0)
-    val fromAt = findTop("FROM", 0)
+    val selAt = Lexer.topWord(body, "SELECT")
+    val fromAt = Lexer.topWord(body, "FROM")
     if (selAt != 0 && body.substring(0, selAt).trim.nonEmpty) return None
     if (fromAt < 0) {
       // `(SELECT AS STRUCT a, b)` without FROM — BigQuery's inline
@@ -4137,23 +3750,14 @@ object GraftSql {
         case _ => None
       }
     }
-    var p = fromAt + 4
-    while (p < body.length && Character.isWhitespace(body.charAt(p))) p += 1
+    var p = Lexer.skipSpace(body, fromAt + 4)
     if (!upper.startsWith("UNNEST", p)) return None
     val head = body.substring(selAt + "SELECT".length, fromAt).trim
     p += "UNNEST".length
-    while (p < body.length && Character.isWhitespace(body.charAt(p))) p += 1
+    p = Lexer.skipSpace(body, p)
     if (p >= body.length || body.charAt(p) != '(') return None
-    var depth = 1; var q = p + 1; var s2 = false
-    while (q < body.length && depth > 0) {
-      val ch = body.charAt(q)
-      if (s2) { if (ch == '\'') s2 = false }
-      else if (ch == '\'') s2 = true
-      else if (ch == '(') depth += 1
-      else if (ch == ')') depth -= 1
-      if (depth > 0) q += 1
-    }
-    if (depth != 0) return None
+    val q = Lexer.closeParen(body, p)
+    if (q < 0) return None
     val arrExpr = body.substring(p + 1, q).trim
     var rest = body.substring(q + 1)
     val AliasRe = """(?is)^\s*(?:AS\s+)?([A-Za-z_]\w*)\s*""".r
@@ -4218,57 +3822,18 @@ object GraftSql {
     * field — unrepresentable in a Spark struct).
     */
   private def structFieldList(list: String): String = {
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    // top-level comma split (quote/paren/bracket aware)
-    val items = {
-      val out = scala.collection.mutable.ListBuffer.empty[String]
-      var start = 0; var depth = 0; var s = false; var t = false; var i = 0
-      while (i < list.length) {
-        val c = list.charAt(i)
-        if (s) { if (c == '\'') s = false }
-        else if (t) { if (c == '`') t = false }
-        else if (c == '\'') s = true
-        else if (c == '`') t = true
-        else if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ',' && depth == 0) { out += list.substring(start, i).trim; start = i + 1 }
-        i += 1
-      }
-      out += list.substring(start).trim
-      out.toList
-    }
+    val items = Lexer.splitTop(list)
     require(items.forall(_.nonEmpty), s"empty field in AS STRUCT list: $list")
     val fields = items.map { item =>
-      // last top-level word-bounded AS
-      var lastAs = -1
-      var i = 0; var depth = 0; var s = false; var t = false
-      val up = item.toUpperCase(java.util.Locale.ROOT)
-      while (i < item.length) {
-        val c = item.charAt(i)
-        if (s) { if (c == '\'') s = false }
-        else if (t) { if (c == '`') t = false }
-        else if (c == '\'') s = true
-        else if (c == '`') t = true
-        else if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (depth == 0 && (c == 'A' || c == 'a') && up.startsWith("AS", i) &&
-          (i == 0 || !isWord(item.charAt(i - 1))) &&
-          (i + 2 >= item.length || !isWord(item.charAt(i + 2)))) lastAs = i
-        i += 1
-      }
+      val lastAs = Lexer.lastTopWord(item, "AS")
       if (lastAs > 0) (item.substring(0, lastAs).trim, item.substring(lastAs + 2).trim)
       else {
         require(item.matches("""(`[^`]+`|[A-Za-z_]\w*)(\.(`[^`]+`|[A-Za-z_]\w*))*"""),
           s"AS STRUCT field '$item' needs a name — BigQuery would emit an anonymous " +
             "field, unrepresentable in a Spark struct; add `AS name`")
-        // last dot at depth 0 of backticks (dots inside `...` are part of the name)
-        var lastDot = -1; var inTick = false; var j = 0
-        while (j < item.length) {
-          val c = item.charAt(j)
-          if (c == '`') inTick = !inTick
-          else if (c == '.' && !inTick) lastDot = j
-          j += 1
-        }
+        // last dot outside backticks (dots inside `...` are part of the name)
+        var lastDot = -1
+        Lexer.foreachCode(item, 0, item.length)((j, _) => if (item.charAt(j) == '.') lastDot = j)
         (item, item.substring(lastDot + 1))
       }
     }
@@ -4288,25 +3853,7 @@ object GraftSql {
     // nested array subqueries in any piece resolve first
     val body = rewriteArraySubquery(body0)
     val upper = body.toUpperCase(java.util.Locale.ROOT)
-    // depth-0, quote-aware keyword find
-    def findTop(kw: String, from: Int): Int = {
-      var i = from; var depth = 0; var s = false
-      def isW(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (s) { if (c == '\'') s = false }
-        else if (c == '\'') s = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && upper.startsWith(kw, i) &&
-          (i == 0 || !isW(body.charAt(i - 1))) &&
-          (i + kw.length >= body.length || !isW(body.charAt(i + kw.length))))
-          return i
-        i += 1
-      }
-      -1
-    }
-    val selAt = findTop("SELECT", 0)
+    val selAt = Lexer.topWord(body, "SELECT")
     require(selAt >= 0, "ARRAY(...) subquery must start with SELECT")
     var exprStart = selAt + "SELECT".length
     val distinct = {
@@ -4315,7 +3862,7 @@ object GraftSql {
       m.foreach(s => exprStart += s.length)
       m.isDefined
     }
-    val fromAt = findTop("FROM", exprStart)
+    val fromAt = Lexer.topWord(body, "FROM", exprStart)
     require(fromAt >= 0, "ARRAY(SELECT ...) needs FROM UNNEST(array_expr) AS alias")
     val expr0 = body.substring(exprStart, fromAt).trim
     require(expr0 != "*", "ARRAY(SELECT * ...) is not supported — name the element")
@@ -4328,24 +3875,15 @@ object GraftSql {
         structFieldList(list)
       case e => e
     }
-    var p = fromAt + 4
-    while (p < body.length && Character.isWhitespace(body.charAt(p))) p += 1
+    var p = Lexer.skipSpace(body, fromAt + 4)
     require(upper.startsWith("UNNEST", p),
       "ARRAY subqueries are supported over UNNEST element pipelines only — a table " +
         "there is a correlated subquery; compose it as a join + ARRAY_AGG instead")
     p += "UNNEST".length
-    while (p < body.length && Character.isWhitespace(body.charAt(p))) p += 1
+    p = Lexer.skipSpace(body, p)
     require(p < body.length && body.charAt(p) == '(', "UNNEST needs (array_expr)")
-    var depth = 1; var q = p + 1; var s2 = false
-    while (q < body.length && depth > 0) {
-      val ch = body.charAt(q)
-      if (s2) { if (ch == '\'') s2 = false }
-      else if (ch == '\'') s2 = true
-      else if (ch == '(') depth += 1
-      else if (ch == ')') depth -= 1
-      if (depth > 0) q += 1
-    }
-    require(depth == 0, "unbalanced parentheses in UNNEST(...)")
+    val q = Lexer.closeParen(body, p)
+    require(q >= 0, "unbalanced parentheses in UNNEST(...)")
     val arrExpr = body.substring(p + 1, q).trim
     var rest = body.substring(q + 1)
     val AliasRe = """(?is)^\s*(?:AS\s+)?([A-Za-z_]\w*)\s*""".r
@@ -4464,19 +4002,7 @@ object GraftSql {
   }
 
   private def rangeSessionizeFromArgs(spark: SparkSession, argBody: String): DataFrame = {
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    argBody.foreach { c =>
-      if (inStr) { if (c == '\'') inStr = false; cur += c }
-      else if (c == '\'') { inStr = true; cur += c }
-      else if (c == '(' || c == '[') { depth += 1; cur += c }
-      else if (c == ')' || c == ']') { depth -= 1; cur += c }
-      else if (c == ',' && depth == 0) { parts += cur.toString; cur.clear() }
-      else cur += c
-    }
-    if (cur.toString.trim.nonEmpty) parts += cur.toString
-    val args = parts.map(_.trim).toSeq
+    val args = Lexer.splitTop(argBody)
     require(args.size >= 2 && args.size <= 4,
       "RANGE_SESSIONIZE takes (TABLE t, 'range_col' [, ['part', ...]] [, 'MEETS'|'OVERLAPS'])")
     val TableRe = """(?is)^TABLE\s+(`[^`]+`|[A-Za-z_][\w$.]*)$""".r
@@ -4534,21 +4060,8 @@ object GraftSql {
   }
 
   private def gapFillFromArgs(spark: SparkSession, argBody: String): DataFrame = {
-    // bracket/paren/quote-aware top-level comma split (value_columns
-    // carries nested lists)
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    argBody.foreach { c =>
-      if (inStr) { if (c == '\'') inStr = false; cur += c }
-      else if (c == '\'') { inStr = true; cur += c }
-      else if (c == '(' || c == '[') { depth += 1; cur += c }
-      else if (c == ')' || c == ']') { depth -= 1; cur += c }
-      else if (c == ',' && depth == 0) { parts += cur.toString; cur.clear() }
-      else cur += c
-    }
-    if (cur.toString.trim.nonEmpty) parts += cur.toString
-    val args = parts.map(_.trim).toSeq
+    // value_columns carries nested lists
+    val args = Lexer.splitTop(argBody)
     require(args.nonEmpty, "GAP_FILL needs (TABLE t, ts_column => ..., bucket_width => ...)")
     val TableRe = """(?is)^TABLE\s+(`[^`]+`|[A-Za-z_][\w$.]*)$""".r
     val name = args.head match {
@@ -4600,23 +4113,7 @@ object GraftSql {
     def listItems(s: String): Seq[String] = {
       require(s.startsWith("[") && s.endsWith("]"),
         s"GAP_FILL expects a [bracketed] list, got: $s")
-      val body = s.substring(1, s.length - 1).trim
-      if (body.isEmpty) Nil
-      else {
-        val out2 = scala.collection.mutable.ListBuffer.empty[String]
-        val c2 = new StringBuilder
-        var d2 = 0; var q2 = false
-        body.foreach { ch =>
-          if (q2) { if (ch == '\'') q2 = false; c2 += ch }
-          else if (ch == '\'') { q2 = true; c2 += ch }
-          else if (ch == '(' || ch == '[') { d2 += 1; c2 += ch }
-          else if (ch == ')' || ch == ']') { d2 -= 1; c2 += ch }
-          else if (ch == ',' && d2 == 0) { out2 += c2.toString.trim; c2.clear() }
-          else c2 += ch
-        }
-        if (c2.toString.trim.nonEmpty) out2 += c2.toString.trim
-        out2.toSeq
-      }
+      Lexer.splitTop(s.substring(1, s.length - 1))
     }
     val partCols = named.get("partitioning_columns").map(listItems(_).map(unq)).getOrElse(Nil)
     val valCols = named.get("value_columns").map(listItems(_).map { p =>
@@ -4634,59 +4131,23 @@ object GraftSql {
     }
   }
 
-  /** First top-level `kw ( args )` call span in `sql` (quote-aware,
-    * balanced parens), as (start, argStart, argEnd, end); None if the
-    * keyword never occurs as a call. Only calls whose FIRST argument
-    * starts with `TABLE ` are taken — an unrelated function that
-    * happens to share the name passes through untouched.
+  /** First `kw ( args )` call span in `sql`, as (start, argStart,
+    * argEnd, end); None if the keyword never occurs as a call. Only
+    * calls whose FIRST argument starts with `TABLE ` are taken — an
+    * unrelated function that happens to share the name passes through
+    * untouched.
     */
-  private def tvfSpan(sql: String, kw: String): Option[(Int, Int, Int, Int)] = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '`') { inTick = true; i += 1 }
-      else if (upper.startsWith(kw, i) &&
-        (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1)) && sql.charAt(i - 1) != '_')) {
-        var p = i + kw.length
-        while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-        if (p < sql.length && sql.charAt(p) == '(') {
-          val argStart = p + 1
-          var depth = 1; var q = argStart; var s2 = false
-          while (q < sql.length && depth > 0) {
-            val ch = sql.charAt(q)
-            if (s2) { if (ch == '\'') s2 = false }
-            else if (ch == '\'') s2 = true
-            else if (ch == '(') depth += 1
-            else if (ch == ')') depth -= 1
-            if (depth > 0) q += 1
-          }
-          require(depth == 0, s"unbalanced parentheses in $kw call")
-          if (sql.substring(argStart, q).trim.toUpperCase(java.util.Locale.ROOT)
-              .startsWith("TABLE ")) return Some((i, argStart, q, q + 1))
-          i = q + 1
-        } else i = p
-      } else i += 1
+  private def tvfSpan(sql: String, kw: String): Option[(Int, Int, Int, Int)] =
+    Lexer.calls(sql, kw).iterator.map { case (i, p, q) =>
+      require(q >= 0, s"unbalanced parentheses in $kw call")
+      (i, p + 1, q, q + 1)
+    }.find { case (_, a, b, _) =>
+      sql.substring(a, b).trim.toUpperCase(java.util.Locale.ROOT).startsWith("TABLE ")
     }
-    None
-  }
 
   private def changeTvfFromArgs(spark: SparkSession, kw: String,
                                 argBody: String): DataFrame = {
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var inStr = false
-    argBody.foreach { c =>
-      if (inStr) { if (c == '\'') inStr = false; cur += c }
-      else if (c == '\'') { inStr = true; cur += c }
-      else if (c == ',') { parts += cur.toString; cur.clear() }
-      else cur += c
-    }
-    if (cur.toString.trim.nonEmpty) parts += cur.toString
-    val args = parts.map(_.trim).toSeq
+    val args = Lexer.splitTop(argBody)
     val TableRe = """(?is)^TABLE\s+(`[^`]+`|[A-Za-z_][\w$.]*)$""".r
     val TsRe = """(?is)^(?:TIMESTAMP\s+)?'(.*)'$""".r
     require(args.nonEmpty && args.size <= 3,
@@ -4962,102 +4423,45 @@ object GraftSql {
   // FLOAT64, STRING, BOOL, ...) and Spark DDL for the rest.
 
   private[graft] def rewriteInformationSchema(spark: SparkSession, sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    if (!upper.contains("INFORMATION_SCHEMA")) return sql
+    if (!sql.toUpperCase(java.util.Locale.ROOT).contains("INFORMATION_SCHEMA")) return sql
+    // each view: its BigQuery name → builder, in creation order
+    val views: Seq[(String, SparkSession => DataFrame)] = Seq(
+      "TABLES" -> (tablesView(_)), "COLUMNS" -> (columnsView(_)),
+      "PARTITIONS" -> (partitionsView(_)), "VIEWS" -> (viewsView(_)),
+      "TABLE_OPTIONS" -> (tableOptionsView(_)),
+      "TABLE_CONSTRAINTS" -> (tableConstraintsView(_)),
+      "KEY_COLUMN_USAGE" -> (keyColumnUsageView(_)),
+      "COLUMN_FIELD_PATHS" -> (columnFieldPathsView(_)),
+      "ROW_ACCESS_POLICIES" -> (rowAccessPoliciesView(_)),
+      "SEARCH_INDEXES" -> (searchIndexesView(_)), "VECTOR_INDEXES" -> (vectorIndexesView(_)),
+      "ROUTINES" -> (routinesView(_)), "MODELS" -> (graft.sql.Models.modelsView(_)),
+      "SCHEMATA" -> (schemataView(_)))
+    def viewOf(name: String) = "__information_schema_" + name.toLowerCase(java.util.Locale.ROOT)
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
-    var replacedTables = false; var replacedColumns = false
-    var replacedPartitions = false; var replacedViews = false
-    var replacedTableOptions = false
-    var replacedTableConstraints = false; var replacedKeyColUsage = false
-    var replacedFieldPaths = false; var replacedRowPolicies = false
-    var replacedSearchIdx = false; var replacedVectorIdx = false
-    var replacedRoutines = false; var replacedModels = false
-    var replacedSchemata = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
-      else if ((c == 'I' || c == 'i') && upper.startsWith("INFORMATION_SCHEMA.", i) &&
-        (i == 0 || (!Character.isLetterOrDigit(sql.charAt(i - 1)) &&
-          sql.charAt(i - 1) != '_' && sql.charAt(i - 1) != '.'))) {
-        val rest = i + "INFORMATION_SCHEMA.".length
-        if (upper.startsWith("TABLES", rest) &&
-          (rest + 6 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 6)) && sql.charAt(rest + 6) != '_')) {
-          out ++= "__information_schema_tables"; replacedTables = true; i = rest + 6
-        } else if (upper.startsWith("COLUMNS", rest) &&
-          (rest + 7 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 7)) && sql.charAt(rest + 7) != '_')) {
-          out ++= "__information_schema_columns"; replacedColumns = true; i = rest + 7
-        } else if (upper.startsWith("PARTITIONS", rest) &&
-          (rest + 10 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 10)) && sql.charAt(rest + 10) != '_')) {
-          out ++= "__information_schema_partitions"; replacedPartitions = true; i = rest + 10
-        } else if (upper.startsWith("TABLE_OPTIONS", rest) &&
-          (rest + 13 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 13)) && sql.charAt(rest + 13) != '_')) {
-          out ++= "__information_schema_table_options"; replacedTableOptions = true; i = rest + 13
-        } else if (upper.startsWith("TABLE_CONSTRAINTS", rest) &&
-          (rest + 17 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 17)) && sql.charAt(rest + 17) != '_')) {
-          out ++= "__information_schema_table_constraints"; replacedTableConstraints = true; i = rest + 17
-        } else if (upper.startsWith("COLUMN_FIELD_PATHS", rest) &&
-          (rest + 18 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 18)) && sql.charAt(rest + 18) != '_')) {
-          out ++= "__information_schema_column_field_paths"; replacedFieldPaths = true; i = rest + 18
-        } else if (upper.startsWith("ROW_ACCESS_POLICIES", rest) &&
-          (rest + 19 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 19)) && sql.charAt(rest + 19) != '_')) {
-          out ++= "__information_schema_row_access_policies"; replacedRowPolicies = true; i = rest + 19
-        } else if (upper.startsWith("KEY_COLUMN_USAGE", rest) &&
-          (rest + 16 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 16)) && sql.charAt(rest + 16) != '_')) {
-          out ++= "__information_schema_key_column_usage"; replacedKeyColUsage = true; i = rest + 16
-        } else if (upper.startsWith("VIEWS", rest) &&
-          (rest + 5 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 5)) && sql.charAt(rest + 5) != '_')) {
-          out ++= "__information_schema_views"; replacedViews = true; i = rest + 5
-        } else if (upper.startsWith("SEARCH_INDEXES", rest) &&
-          (rest + 14 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 14)) && sql.charAt(rest + 14) != '_')) {
-          out ++= "__information_schema_search_indexes"; replacedSearchIdx = true; i = rest + 14
-        } else if (upper.startsWith("VECTOR_INDEXES", rest) &&
-          (rest + 14 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 14)) && sql.charAt(rest + 14) != '_')) {
-          out ++= "__information_schema_vector_indexes"; replacedVectorIdx = true; i = rest + 14
-        } else if (upper.startsWith("ROUTINES", rest) &&
-          (rest + 8 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 8)) && sql.charAt(rest + 8) != '_')) {
-          out ++= "__information_schema_routines"; replacedRoutines = true; i = rest + 8
-        } else if (upper.startsWith("MODELS", rest) &&
-          (rest + 6 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 6)) && sql.charAt(rest + 6) != '_')) {
-          out ++= "__information_schema_models"; replacedModels = true; i = rest + 6
-        } else if (upper.startsWith("SCHEMATA", rest) &&
-          (rest + 8 >= sql.length || !Character.isLetterOrDigit(sql.charAt(rest + 8)) && sql.charAt(rest + 8) != '_')) {
-          out ++= "__information_schema_schemata"; replacedSchemata = true; i = rest + 8
-        } else throw new IllegalArgumentException(
-          "only INFORMATION_SCHEMA.TABLES, .COLUMNS, .PARTITIONS, .TABLE_OPTIONS, " +
-            ".TABLE_CONSTRAINTS, .KEY_COLUMN_USAGE, .COLUMN_FIELD_PATHS, " +
-            ".ROW_ACCESS_POLICIES, .VIEWS, .SCHEMATA, .SEARCH_INDEXES, " +
-            ".VECTOR_INDEXES, .ROUTINES and .MODELS are available (a session " +
-            "catalog has no jobs metadata)")
-      } else { out += c; i += 1 }
+    val used = scala.collection.mutable.Set.empty[String]
+    var from = 0
+    var i = Lexer.indexOfWord(sql, "INFORMATION_SCHEMA")
+    while (i >= 0) {
+      // a dataset-qualified x.INFORMATION_SCHEMA is not this catalog's
+      if (sql.startsWith(".", i + 18) && (i == 0 || sql.charAt(i - 1) != '.')) {
+        val rest = i + 19
+        val name = views.map(_._1).find(Lexer.wordAt(sql, _, rest)).getOrElse(
+          throw new IllegalArgumentException(
+            "only INFORMATION_SCHEMA.TABLES, .COLUMNS, .PARTITIONS, .TABLE_OPTIONS, " +
+              ".TABLE_CONSTRAINTS, .KEY_COLUMN_USAGE, .COLUMN_FIELD_PATHS, " +
+              ".ROW_ACCESS_POLICIES, .VIEWS, .SCHEMATA, .SEARCH_INDEXES, " +
+              ".VECTOR_INDEXES, .ROUTINES and .MODELS are available (a session " +
+              "catalog has no jobs metadata)"))
+        out ++= sql.substring(from, i) ++= viewOf(name)
+        used += name
+        from = rest + name.length
+      }
+      i = Lexer.indexOfWord(sql, "INFORMATION_SCHEMA", i + 18)
     }
-    if (replacedTables) tablesView(spark).createOrReplaceTempView("__information_schema_tables")
-    if (replacedColumns) columnsView(spark).createOrReplaceTempView("__information_schema_columns")
-    if (replacedPartitions) partitionsView(spark).createOrReplaceTempView("__information_schema_partitions")
-    if (replacedViews) viewsView(spark).createOrReplaceTempView("__information_schema_views")
-    if (replacedTableOptions)
-      tableOptionsView(spark).createOrReplaceTempView("__information_schema_table_options")
-    if (replacedTableConstraints)
-      tableConstraintsView(spark).createOrReplaceTempView("__information_schema_table_constraints")
-    if (replacedKeyColUsage)
-      keyColumnUsageView(spark).createOrReplaceTempView("__information_schema_key_column_usage")
-    if (replacedFieldPaths)
-      columnFieldPathsView(spark).createOrReplaceTempView("__information_schema_column_field_paths")
-    if (replacedRowPolicies)
-      rowAccessPoliciesView(spark).createOrReplaceTempView("__information_schema_row_access_policies")
-    if (replacedSearchIdx)
-      searchIndexesView(spark).createOrReplaceTempView("__information_schema_search_indexes")
-    if (replacedVectorIdx)
-      vectorIndexesView(spark).createOrReplaceTempView("__information_schema_vector_indexes")
-    if (replacedRoutines)
-      routinesView(spark).createOrReplaceTempView("__information_schema_routines")
-    if (replacedModels)
-      graft.sql.Models.modelsView(spark).createOrReplaceTempView("__information_schema_models")
-    if (replacedSchemata)
-      schemataView(spark).createOrReplaceTempView("__information_schema_schemata")
+    out ++= sql.substring(from)
+    views.foreach { case (name, view) =>
+      if (used(name)) view(spark).createOrReplaceTempView(viewOf(name))
+    }
     out.toString
   }
 

@@ -1,5 +1,7 @@
 package graft.sql
 
+import Lexer.isWord
+
 import graft.GraftSql
 
 /** The BigQuery function-SPELLING rewrite family, split out of
@@ -39,59 +41,20 @@ private[graft] object Functions {
   private[graft] def rewriteJsonArrayFns(sql0: String): String = {
     val fns = Seq("JSON_EXTRACT_STRING_ARRAY", "JSON_EXTRACT_ARRAY",
       "JSON_QUERY_ARRAY", "JSON_VALUE_ARRAY") // longest first
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    def pass(sql: String): String = {
-      val upper = sql.toUpperCase(java.util.Locale.ROOT)
-      val out = new StringBuilder
-      var i = 0; var inStr = false; var inTick = false
-      while (i < sql.length) {
-        val c = sql.charAt(i)
-        if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-        else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-        else if (c == '\'') { out += c; inStr = true; i += 1 }
-        else if (c == '`') { out += c; inTick = true; i += 1 }
-        else {
-          val hit = if ((c == 'J' || c == 'j') && (i == 0 || !isWord(sql.charAt(i - 1))))
-            fns.find(f => upper.startsWith(f, i) &&
-              (i + f.length >= sql.length || !isWord(sql.charAt(i + f.length))))
-          else None
-          hit match {
-            case Some(f) =>
-              var p = i + f.length
-              while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-              require(p < sql.length && sql.charAt(p) == '(',
-                s"$f must be called with (json [, path])")
-              // balanced, quote-aware arg scan with top-level comma split
-              var depth = 1; var q = p + 1; var s2 = false
-              var commaAt = -1
-              while (q < sql.length && depth > 0) {
-                val ch = sql.charAt(q)
-                if (s2) { if (ch == '\'') s2 = false }
-                else if (ch == '\'') s2 = true
-                else if (ch == '(') depth += 1
-                else if (ch == ')') depth -= 1
-                else if (ch == ',' && depth == 1) {
-                  require(commaAt < 0, s"$f takes at most (json, path)")
-                  commaAt = q
-                }
-                q += 1
-              }
-              require(depth == 0, s"unbalanced parens in $f(...)")
-              val (j, path) =
-                if (commaAt < 0) (sql.substring(p + 1, q - 1).trim, "'$'")
-                else (sql.substring(p + 1, commaAt).trim,
-                  sql.substring(commaAt + 1, q - 1).trim)
-              require(j.nonEmpty, s"$f needs a json argument")
-              out ++= s"from_json(get_json_object($j, $path), 'array<string>')"
-              i = q
-            case None => out += c; i += 1
-          }
-        }
-      }
-      out.toString
-    }
+    fixpoint(sql0, fns)(rewriteCalls(_, fns) { (f, args) =>
+      require(args.size <= 2, s"$f takes at most (json, path)")
+      val j = args.headOption.getOrElse("")
+      require(j.nonEmpty, s"$f needs a json argument")
+      Some(s"from_json(get_json_object($j, ${args.lift(1).getOrElse("'$'")}), 'array<string>')")
+    })
+  }
+
+  /** `pass` applied until the text stops changing — at most 10 times,
+    * and only while one of `names` still occurs in it.
+    */
+  private def fixpoint(sql0: String, names: Seq[String])(pass: String => String): String = {
     var cur = sql0; var n = 0
-    while (fns.exists(cur.toUpperCase(java.util.Locale.ROOT).contains) && n < 10) {
+    while (names.exists(cur.toUpperCase(java.util.Locale.ROOT).contains) && n < 10) {
       val next = pass(cur)
       if (next == cur) return cur
       cur = next; n += 1
@@ -110,47 +73,25 @@ private[graft] object Functions {
   private def rewriteCalls(sql: String, names: Seq[String])
                           (f: (String, Seq[String]) => Option[String]): String = {
     val ordered = names.sortBy(-_.length)
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) { out ++= sql.substring(i, e); i = e }
       else {
         val hit = if (Character.isLetter(c) && (i == 0 || !isWord(sql.charAt(i - 1))))
-          ordered.find(n => upper.startsWith(n, i) &&
-            (i + n.length >= sql.length || !isWord(sql.charAt(i + n.length))))
+          ordered.find(Lexer.wordAt(sql, _, i))
         else None
         val applied = hit.flatMap { n =>
-          var p = i + n.length
-          while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
+          val p = Lexer.skipSpace(sql, i + n.length)
           if (p >= sql.length || sql.charAt(p) != '(') None
           else {
-            // bracket depth keeps commas inside `[a, b, c]` array
-            // literals (RANGE_BUCKET's boundaries) from splitting args
-            var depth = 1; var bdepth = 0; var q = p + 1; var s2 = false
-            val commas = scala.collection.mutable.ArrayBuffer.empty[Int]
-            while (q < sql.length && depth > 0) {
-              val ch = sql.charAt(q)
-              if (s2) { if (ch == '\'') s2 = false }
-              else if (ch == '\'') s2 = true
-              else if (ch == '(') depth += 1
-              else if (ch == ')') depth -= 1
-              else if (ch == '[') bdepth += 1
-              else if (ch == ']') bdepth -= 1
-              else if (ch == ',' && depth == 1 && bdepth == 0) commas += q
-              q += 1
-            }
-            require(depth == 0, s"unbalanced parens in $n(...)")
-            val inner = sql.substring(p + 1, q - 1)
-            val args =
-              if (inner.trim.isEmpty) Seq.empty[String]
-              else (p +: commas.toSeq :+ (q - 1)).sliding(2)
-                .map { case Seq(x, y) => sql.substring(x + 1, y).trim }.toSeq
+            val q = Lexer.closeParen(sql, p)
+            require(q >= 0, s"unbalanced parens in $n(...)")
+            // commas inside `[a, b, c]` array literals (RANGE_BUCKET's
+            // boundaries) do not split args
+            val args = Lexer.splitTop(sql.substring(p + 1, q))
             // None from f = leave the CALL HEAD verbatim (a
             // Spark-native spelling must not even be re-cased) but
             // keep scanning INSIDE the parens: a registered name
@@ -160,7 +101,7 @@ private[graft] object Functions {
             // BigQuery-spelled forever, because the same outer name
             // re-matched (and re-passed) on every fixpoint pass
             f(n, args) match {
-              case Some(text) => Some((text, q))
+              case Some(text) => Some((text, q + 1))
               case None => Some((sql.substring(i, p + 1), p + 1))
             }
           }
@@ -202,91 +143,43 @@ private[graft] object Functions {
     */
   private[graft] def rewriteGenerateFns(sql0: String): String = {
     val fns = Seq("GENERATE_TIMESTAMP_ARRAY", "GENERATE_DATE_ARRAY", "GENERATE_ARRAY")
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     val IntervalRe = """(?is)^INTERVAL\s+(-?\d+)\s+([A-Za-z]+)$""".r
     def emptyOf(a: String) = s"slice(sequence(($a),($a)),1,0)"
-    def pass(sql: String): String = {
-      val upper = sql.toUpperCase(java.util.Locale.ROOT)
-      val out = new StringBuilder
-      var i = 0; var inStr = false; var inTick = false
-      while (i < sql.length) {
-        val c = sql.charAt(i)
-        if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-        else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-        else if (c == '\'') { out += c; inStr = true; i += 1 }
-        else if (c == '`') { out += c; inTick = true; i += 1 }
-        else {
-          val hit = if ((c == 'G' || c == 'g') && (i == 0 || !isWord(sql.charAt(i - 1))))
-            fns.find(f => upper.startsWith(f, i) &&
-              (i + f.length >= sql.length || !isWord(sql.charAt(i + f.length))))
-          else None
-          hit match {
-            case Some(f) =>
-              var p = i + f.length
-              while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-              require(p < sql.length && sql.charAt(p) == '(',
-                s"$f must be called with (start, stop [, step])")
-              var depth = 1; var q = p + 1; var s2 = false
-              val commas = scala.collection.mutable.ArrayBuffer.empty[Int]
-              while (q < sql.length && depth > 0) {
-                val ch = sql.charAt(q)
-                if (s2) { if (ch == '\'') s2 = false }
-                else if (ch == '\'') s2 = true
-                else if (ch == '(') depth += 1
-                else if (ch == ')') depth -= 1
-                else if (ch == ',' && depth == 1) commas += q
-                q += 1
-              }
-              require(depth == 0, s"unbalanced parens in $f(...)")
-              val bounds = (p +: commas.toSeq :+ (q - 1)).sliding(2)
-                .map { case Seq(x, y) => sql.substring(x + 1, y).trim }.toSeq
-              require(bounds.size == 2 || bounds.size == 3,
-                s"$f takes (start, stop [, step]), got ${bounds.size} arguments")
-              val (a, b) = (bounds(0), bounds(1))
-              val rewritten = (f, bounds.lift(2)) match {
-                case ("GENERATE_ARRAY", stepOpt) =>
-                  val FracLit = """-?(\d+\.\d*|\.\d+)([eE][-+]?\d+)?"""
-                  val s = stepOpt.getOrElse("1")
-                  if (bounds.exists(_.matches(FracLit))) {
-                    val ad = s"CAST(($a) AS DOUBLE)"
-                    s"(CASE WHEN ($s) = 0 THEN raise_error('GENERATE_ARRAY step cannot be 0') " +
-                      s"WHEN (($b) - ($a)) * ($s) < 0 THEN slice(array($ad),1,0) " +
-                      s"ELSE transform(sequence(0, CAST(floor(CAST(($b) - ($a) AS DOUBLE) / ($s)) AS BIGINT)), " +
-                      s"i -> $ad + CAST(i AS DOUBLE) * ($s)) END)"
-                  } else if (stepOpt.isEmpty)
-                    s"(CASE WHEN ($b) < ($a) THEN ${emptyOf(a)} ELSE sequence(($a),($b)) END)"
-                  else
-                    s"(CASE WHEN (($b) - ($a)) * ($s) < 0 THEN ${emptyOf(a)} " +
-                      s"ELSE sequence(($a),($b),($s)) END)"
-                case ("GENERATE_DATE_ARRAY", None) =>
-                  s"(CASE WHEN ($b) < ($a) THEN ${emptyOf(a)} ELSE sequence(($a),($b)) END)"
-                case (_, None) => throw new IllegalArgumentException(
-                  s"$f requires an explicit INTERVAL step")
-                case (_, Some(step)) => step match {
-                  case IntervalRe(n, unit) =>
-                    val cmp = if (n.toLong >= 0) s"($b) < ($a)" else s"($b) > ($a)"
-                    s"(CASE WHEN $cmp THEN ${emptyOf(a)} " +
-                      s"ELSE sequence(($a),($b),INTERVAL $n $unit) END)"
-                  case other => throw new IllegalArgumentException(
-                    s"$f step must be a literal INTERVAL [-]n unit (got '$other') — " +
-                      "the empty-on-direction-mismatch guard needs the sign statically")
-                }
-              }
-              out ++= rewritten
-              i = q
-            case None => out += c; i += 1
-          }
+    fixpoint(sql0, fns)(rewriteCalls(_, fns) { (f, bounds) =>
+      require(bounds.size == 2 || bounds.size == 3,
+        s"$f takes (start, stop [, step]), got ${bounds.size} arguments")
+      val (a, b) = (bounds(0), bounds(1))
+      val rewritten = (f, bounds.lift(2)) match {
+        case ("GENERATE_ARRAY", stepOpt) =>
+          val FracLit = """-?(\d+\.\d*|\.\d+)([eE][-+]?\d+)?"""
+          val s = stepOpt.getOrElse("1")
+          if (bounds.exists(_.matches(FracLit))) {
+            val ad = s"CAST(($a) AS DOUBLE)"
+            s"(CASE WHEN ($s) = 0 THEN raise_error('GENERATE_ARRAY step cannot be 0') " +
+              s"WHEN (($b) - ($a)) * ($s) < 0 THEN slice(array($ad),1,0) " +
+              s"ELSE transform(sequence(0, CAST(floor(CAST(($b) - ($a) AS DOUBLE) / ($s)) AS BIGINT)), " +
+              s"i -> $ad + CAST(i AS DOUBLE) * ($s)) END)"
+          } else if (stepOpt.isEmpty)
+            s"(CASE WHEN ($b) < ($a) THEN ${emptyOf(a)} ELSE sequence(($a),($b)) END)"
+          else
+            s"(CASE WHEN (($b) - ($a)) * ($s) < 0 THEN ${emptyOf(a)} " +
+              s"ELSE sequence(($a),($b),($s)) END)"
+        case ("GENERATE_DATE_ARRAY", None) =>
+          s"(CASE WHEN ($b) < ($a) THEN ${emptyOf(a)} ELSE sequence(($a),($b)) END)"
+        case (_, None) => throw new IllegalArgumentException(
+          s"$f requires an explicit INTERVAL step")
+        case (_, Some(step)) => step match {
+          case IntervalRe(n, unit) =>
+            val cmp = if (n.toLong >= 0) s"($b) < ($a)" else s"($b) > ($a)"
+            s"(CASE WHEN $cmp THEN ${emptyOf(a)} " +
+              s"ELSE sequence(($a),($b),INTERVAL $n $unit) END)"
+          case other => throw new IllegalArgumentException(
+            s"$f step must be a literal INTERVAL [-]n unit (got '$other') — " +
+              "the empty-on-direction-mismatch guard needs the sign statically")
         }
       }
-      out.toString
-    }
-    var cur = sql0; var n = 0
-    while (fns.exists(cur.toUpperCase(java.util.Locale.ROOT).contains) && n < 10) {
-      val next = pass(cur)
-      if (next == cur) return cur
-      cur = next; n += 1
-    }
-    cur
+      Some(rewritten)
+    })
   }
 
   // ── BigQuery function spellings ──────────────────────────────────
@@ -465,29 +358,8 @@ private[graft] object Functions {
     val HavingRe = """(?is)^(.*?)\bHAVING\s+(MAX|MIN)\s+(.+)$""".r
     // top-level (depth-0, quote-aware) position of `ORDER BY` inside
     // one argument's text, -1 if absent
-    def topLevelOrderBy(text: String): Int = {
-      def isW(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-      val up = text.toUpperCase(java.util.Locale.ROOT)
-      var i = 0; var depth = 0; var s = false; var t = false
-      while (i < text.length) {
-        val c = text.charAt(i)
-        if (s) { if (c == '\'') s = false }
-        else if (t) { if (c == '`') t = false }
-        else if (c == '\'') s = true
-        else if (c == '`') t = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'O' || c == 'o') && up.startsWith("ORDER", i) &&
-          (i == 0 || !isW(text.charAt(i - 1)))) {
-          var j = i + 5
-          while (j < text.length && Character.isWhitespace(text.charAt(j))) j += 1
-          if (up.startsWith("BY", j) && (j + 2 >= text.length || !isW(text.charAt(j + 2))))
-            return i
-        }
-        i += 1
-      }
-      -1
-    }
+    def topLevelOrderBy(text: String): Int = Lexer.findTop(text, 0, text.length)(i =>
+      Lexer.wordAt(text, "ORDER", i) && Lexer.wordAt(text, "BY", Lexer.skipSpace(text, i + 5)))
     // BigQuery's ordered aggregates: `STRING_AGG(e[, sep] ORDER BY k...)`
     // → `listagg(e, sep) WITHIN GROUP (ORDER BY k...)`, and
     // `ARRAY_AGG(e ORDER BY k... [LIMIT n])` → sort-by-key struct route
@@ -2360,40 +2232,19 @@ private[graft] object Functions {
     // array_contains is NULL on a NULL operand and FALSE on an empty
     // array, exactly IN UNNEST's.
     def inUnnest(sql: String): String = {
-      val upper = sql.toUpperCase(java.util.Locale.ROOT)
-      def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
       val out = new StringBuilder
-      var i = 0; var inStr = false; var inTick = false
+      var i = 0
       while (i < sql.length) {
         val c = sql.charAt(i)
-        if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-        else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-        else if (c == '\'') { out += c; inStr = true; i += 1 }
-        else if (c == '`') { out += c; inTick = true; i += 1 }
-        else if ((c == 'I' || c == 'i') && upper.startsWith("IN", i) &&
-          (i == 0 || !isWord(sql.charAt(i - 1))) &&
-          (i + 2 >= sql.length || !isWord(sql.charAt(i + 2)))) {
-          var p = i + 2
-          while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-          val isUn = upper.startsWith("UNNEST", p) &&
-            (p + 6 >= sql.length || !isWord(sql.charAt(p + 6))) && {
-              var q0 = p + 6
-              while (q0 < sql.length && Character.isWhitespace(sql.charAt(q0))) q0 += 1
-              q0 < sql.length && sql.charAt(q0) == '('
-            }
-          if (!isUn) { out += c; i += 1 }
+        val e = Lexer.opaqueEnd(sql, i)
+        if (e > i) { out ++= sql.substring(i, e); i = e }
+        else if ((c == 'I' || c == 'i') && Lexer.wordAt(sql, "IN", i)) {
+          val p = Lexer.skipSpace(sql, i + 2)
+          val q = Lexer.skipSpace(sql, p + 6)
+          if (!Lexer.wordAt(sql, "UNNEST", p) || !sql.startsWith("(", q)) { out += c; i += 1 }
           else {
-            var q = sql.indexOf('(', p + 6)
-            var depth = 1; var r = q + 1; var s2 = false
-            while (r < sql.length && depth > 0) {
-              val ch = sql.charAt(r)
-              if (s2) { if (ch == '\'') s2 = false }
-              else if (ch == '\'') s2 = true
-              else if (ch == '(') depth += 1
-              else if (ch == ')') depth -= 1
-              r += 1
-            }
-            require(depth == 0, "unbalanced parens in IN UNNEST(...)")
+            val r = Lexer.closeParen(sql, q) + 1
+            require(r > 0, "unbalanced parens in IN UNNEST(...)")
             val arr = sql.substring(q + 1, r - 1)
             // backward over what's already emitted: optional NOT, then
             // the operand (identifier chain / (...) group / f(...))
@@ -2409,13 +2260,7 @@ private[graft] object Functions {
             val t2 = tail.reverse.dropWhile(_.isWhitespace).reverse
             var opStart = t2.length
             if (opStart > 0 && t2.charAt(opStart - 1) == ')') {
-              var d = 0; var k = opStart - 1; var found = -1
-              while (k >= 0 && found < 0) {
-                val ch = t2.charAt(k)
-                if (ch == ')') d += 1
-                else if (ch == '(') { d -= 1; if (d == 0) found = k }
-                k -= 1
-              }
+              val found = Lexer.openParen(t2, opStart - 1)
               require(found >= 0, "IN UNNEST: unbalanced operand parens")
               opStart = found
               // a call: the function name belongs to the operand
@@ -2440,40 +2285,25 @@ private[graft] object Functions {
 
     // array subscripts: [OFFSET(i)] → [(i)], [ORDINAL(i)] → [(i) - 1]
     def subscripts(sql: String): String = {
-      val upper = sql.toUpperCase(java.util.Locale.ROOT)
       val out = new StringBuilder
-      var i = 0; var inStr = false; var inTick = false
+      var i = 0
       while (i < sql.length) {
         val c = sql.charAt(i)
-        if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-        else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-        else if (c == '\'') { out += c; inStr = true; i += 1 }
-        else if (c == '`') { out += c; inTick = true; i += 1 }
+        val e = Lexer.opaqueEnd(sql, i)
+        if (e > i) { out ++= sql.substring(i, e); i = e }
         else if (c == '[') {
-          var p = i + 1
-          while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
+          val p = Lexer.skipSpace(sql, i + 1)
           val kw = Seq("SAFE_OFFSET", "SAFE_ORDINAL", "OFFSET", "ORDINAL")
-            .find(k => upper.startsWith(k, p) &&
-              p + k.length < sql.length &&
-              sql.substring(p + k.length).dropWhile(Character.isWhitespace).headOption.contains('('))
+            .find(k => sql.regionMatches(true, p, k, 0, k.length) &&
+              sql.startsWith("(", Lexer.skipSpace(sql, p + k.length)))
           kw match {
             case Some(k) =>
-              var q = p + k.length
-              while (q < sql.length && Character.isWhitespace(sql.charAt(q))) q += 1
-              var depth = 1; var r = q + 1; var s2 = false
-              while (r < sql.length && depth > 0) {
-                val ch = sql.charAt(r)
-                if (s2) { if (ch == '\'') s2 = false }
-                else if (ch == '\'') s2 = true
-                else if (ch == '(') depth += 1
-                else if (ch == ')') depth -= 1
-                r += 1
-              }
-              require(depth == 0, s"unbalanced parens in [$k(...)]")
+              val q = Lexer.skipSpace(sql, p + k.length)
+              val r = Lexer.closeParen(sql, q) + 1
+              require(r > 0, s"unbalanced parens in [$k(...)]")
               val idx = sql.substring(q + 1, r - 1)
-              var e = r
-              while (e < sql.length && Character.isWhitespace(sql.charAt(e))) e += 1
-              require(e < sql.length && sql.charAt(e) == ']', s"expected ] after $k(...)")
+              val close = Lexer.skipSpace(sql, r)
+              require(close < sql.length && sql.charAt(close) == ']', s"expected ] after $k(...)")
               if (k.startsWith("SAFE_")) {
                 // BigQuery NULL-on-out-of-bounds: capture the array
                 // operand backward from what's already emitted (the
@@ -2482,28 +2312,21 @@ private[graft] object Functions {
                 // size() CASE — NULL index, negative/past-end index
                 // and NULL array all yield NULL under either ANSI
                 // setting.
-                def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
                 val t2 = out.toString.reverse.dropWhile(_.isWhitespace).reverse
                 var opStart = t2.length
                 var scanning = true
                 while (scanning) {
                   scanning = false
                   if (opStart > 0 && (t2.charAt(opStart - 1) == ')' || t2.charAt(opStart - 1) == ']')) {
-                    val (open, close) = if (t2.charAt(opStart - 1) == ')') ('(', ')') else ('[', ']')
-                    var d = 0; var j = opStart - 1; var found = -1
-                    while (j >= 0 && found < 0) {
-                      val ch = t2.charAt(j)
-                      if (ch == close) d += 1
-                      else if (ch == open) { d -= 1; if (d == 0) found = j }
-                      j -= 1
-                    }
+                    val closeCh = t2.charAt(opStart - 1)
+                    val found = Lexer.openParen(t2, opStart - 1)
                     require(found >= 0, s"[$k(i)]: unbalanced operand brackets")
                     opStart = found
                     // a call name, or another bracket/group to the left
                     // (chained subscripts: m['k'][SAFE_OFFSET(0)])
                     while (opStart > 0 && (isWord(t2.charAt(opStart - 1)) || t2.charAt(opStart - 1) == '.'))
                       opStart -= 1
-                    if (close == ']' && opStart > 0 &&
+                    if (closeCh == ']' && opStart > 0 &&
                       (t2.charAt(opStart - 1) == ')' || t2.charAt(opStart - 1) == ']'))
                       scanning = true
                   } else {
@@ -2523,7 +2346,7 @@ private[graft] object Functions {
               } else {
                 out ++= (if (k == "OFFSET") s"[($idx)]" else s"[($idx) - 1]")
               }
-              i = e + 1
+              i = close + 1
             case None => out += c; i += 1
           }
         } else { out += c; i += 1 }
@@ -2541,24 +2364,19 @@ private[graft] object Functions {
       "BOOL", "INT64", "FLOAT64", "STRING",
       "PARSE_NUMERIC", "PARSE_BIGNUMERIC")
     def safePrefix(sql: String): String = {
-      val upper = sql.toUpperCase(java.util.Locale.ROOT)
-      if (!upper.contains("SAFE.")) return sql
-      def isWordC(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
+      if (!sql.toUpperCase(java.util.Locale.ROOT).contains("SAFE.")) return sql
       val out = new StringBuilder
-      var i = 0; var inStr = false; var inTick = false
+      var i = 0
       while (i < sql.length) {
         val c = sql.charAt(i)
-        if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-        else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-        else if (c == '\'') { out += c; inStr = true; i += 1 }
-        else if (c == '`') { out += c; inTick = true; i += 1 }
-        else if ((c == 'S' || c == 's') && upper.startsWith("SAFE.", i) &&
-          (i == 0 || (!isWordC(sql.charAt(i - 1)) && sql.charAt(i - 1) != '.'))) {
+        val e = Lexer.opaqueEnd(sql, i)
+        if (e > i) { out ++= sql.substring(i, e); i = e }
+        else if ((c == 'S' || c == 's') && sql.regionMatches(true, i, "SAFE.", 0, 5) &&
+          (i == 0 || (!isWord(sql.charAt(i - 1)) && sql.charAt(i - 1) != '.'))) {
           var j = i + 5
-          while (j < sql.length && isWordC(sql.charAt(j))) j += 1
+          while (j < sql.length && isWord(sql.charAt(j))) j += 1
           val fn = sql.substring(i + 5, j)
-          var k = j
-          while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
+          val k = Lexer.skipSpace(sql, j)
           val fnUp = fn.toUpperCase(java.util.Locale.ROOT)
           if (fn.nonEmpty && k < sql.length && sql.charAt(k) == '(' &&
               (fnUp == "DETERMINISTIC_DECRYPT_STRING" || fnUp == "DETERMINISTIC_DECRYPT_BYTES")) {
@@ -2604,28 +2422,28 @@ private[graft] object Functions {
     */
   private val TimeLitRe =
     """(?is)^TIME\s+'(\d{2}:\d{2}:\d{2}(?:\.\d{1,6})?)'""".r
-  private[graft] def timeLiterals(sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    if (!upper.contains("TIME")) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
+  private[graft] def timeLiterals(sql: String): String =
+    replaceLiterals(sql, "TIME", TimeLitRe)(m => s"TIMESTAMP_NTZ '1970-01-01 ${m.group(1)}'")
+
+  /** `sql` with each code occurrence of the word `kw` that starts a
+    * match of `re` replaced by `f(match)`; other text is kept.
+    */
+  private def replaceLiterals(sql: String, kw: String, re: scala.util.matching.Regex)
+                             (f: scala.util.matching.Regex.Match => String): String = {
+    if (!sql.toUpperCase(java.util.Locale.ROOT).contains(kw)) return sql
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
-      else if ((c == 'T' || c == 't') && upper.startsWith("TIME", i) &&
-        (i == 0 || !isWord(sql.charAt(i - 1)))) {
-        TimeLitRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) =>
-            out ++= s"TIMESTAMP_NTZ '1970-01-01 ${m.group(1)}'"
-            i += m.matched.length
-          case None => out += c; i += 1
-        }
-      } else { out += c; i += 1 }
+    var from = 0
+    var i = Lexer.indexOfWord(sql, kw)
+    while (i >= 0) {
+      re.findPrefixMatchOf(sql.substring(i)) match {
+        case Some(m) =>
+          out ++= sql.substring(from, i) ++= f(m)
+          from = i + m.matched.length
+          i = Lexer.indexOfWord(sql, kw, from)
+        case None => i = Lexer.indexOfWord(sql, kw, i + kw.length)
+      }
     }
+    out ++= sql.substring(from)
     out.toString
   }
 
@@ -2642,32 +2460,11 @@ private[graft] object Functions {
     ("""(?is)^INTERVAL\s+'([^']*)'\s+""" +
       """(YEAR|MONTH|DAY|HOUR|MINUTE|SECOND)\s+TO\s+(YEAR|MONTH|DAY|HOUR|MINUTE|SECOND)""").r
   private val IntervalParts = Seq("YEAR", "MONTH", "DAY", "HOUR", "MINUTE", "SECOND")
-  private[graft] def intervalLiterals(sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    if (!upper.contains("INTERVAL")) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
-      else if ((c == 'I' || c == 'i') && upper.startsWith("INTERVAL", i) &&
-        (i == 0 || !isWord(sql.charAt(i - 1)))) {
-        IntervalRangeLitRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) =>
-            out ++= intervalLiteralToMakeInterval(m.group(1).trim,
-              m.group(2).toUpperCase(java.util.Locale.ROOT),
-              m.group(3).toUpperCase(java.util.Locale.ROOT))
-            i += m.matched.length
-          case None => out += c; i += 1
-        }
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
+  private[graft] def intervalLiterals(sql: String): String =
+    replaceLiterals(sql, "INTERVAL", IntervalRangeLitRe)(m =>
+      intervalLiteralToMakeInterval(m.group(1).trim,
+        m.group(2).toUpperCase(java.util.Locale.ROOT),
+        m.group(3).toUpperCase(java.util.Locale.ROOT)))
 
   private def intervalLiteralToMakeInterval(payload: String, p1: String, p2: String): String = {
     val lo = IntervalParts.indexOf(p1)
@@ -2735,34 +2532,13 @@ private[graft] object Functions {
 
   private val RangeLitRe =
     """(?is)^RANGE\s*<\s*DATE\s*>\s*'\[\s*(\d{4}-\d{2}-\d{2}|UNBOUNDED)\s*,\s*(\d{4}-\d{2}-\d{2}|UNBOUNDED)\s*\)'""".r
-  private[graft] def rangeLiterals(sql: String): String = {
-    val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    if (!upper.contains("RANGE")) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-    val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
-      else if ((c == 'R' || c == 'r') && upper.startsWith("RANGE", i) &&
-        (i == 0 || !isWord(sql.charAt(i - 1)))) {
-        RangeLitRe.findPrefixMatchOf(sql.substring(i)) match {
-          case Some(m) =>
-            def side(v: String) =
-              if (v.equalsIgnoreCase("UNBOUNDED")) "CAST(NULL AS DATE)"
-              else s"DATE '$v'"
-            out ++= s"named_struct('range_start', ${side(m.group(1))}, " +
-              s"'range_end', ${side(m.group(2))})"
-            i += m.matched.length
-          case None => out += c; i += 1
-        }
-      } else { out += c; i += 1 }
+  private[graft] def rangeLiterals(sql: String): String =
+    replaceLiterals(sql, "RANGE", RangeLitRe) { m =>
+      def side(v: String) =
+        if (v.equalsIgnoreCase("UNBOUNDED")) "CAST(NULL AS DATE)"
+        else s"DATE '$v'"
+      s"named_struct('range_start', ${side(m.group(1))}, 'range_end', ${side(m.group(2))})"
     }
-    out.toString
-  }
 
   /** BigQuery bare array literals: a `[` NOT in subscript position
     * (the previous emitted non-whitespace char is not an identifier
@@ -2785,9 +2561,8 @@ private[graft] object Functions {
   private[graft] def bracketLiterals(sql: String): String = {
     if (!sql.contains('[')) return sql
     val upper = sql.toUpperCase(java.util.Locale.ROOT)
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     var depth = 0
     var optSpans = List.empty[Int] // paren depths at which OPTIONS(/FILES( opened
     def prevNonWs: Char = {
@@ -2797,10 +2572,8 @@ private[graft] object Functions {
     }
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) { out ++= sql.substring(i, e); i = e }
       else if (c == '(') {
         val pw = {
           var e = i - 1
@@ -2830,19 +2603,8 @@ private[graft] object Functions {
         if ((isWord(p) && !wordIsKeyword) || p == ')' || p == ']' || p == '`' || p == '>') {
           out += c; i += 1
         } else {
-          // find the matching ] (quote- and bracket-depth-aware)
-          var d = 1; var r = i + 1; var s2 = false; var t2 = false
-          while (r < sql.length && d > 0) {
-            val ch = sql.charAt(r)
-            if (s2) { if (ch == '\'') s2 = false }
-            else if (t2) { if (ch == '`') t2 = false }
-            else if (ch == '\'') s2 = true
-            else if (ch == '`') t2 = true
-            else if (ch == '[') d += 1
-            else if (ch == ']') d -= 1
-            if (d > 0) r += 1
-          }
-          require(d == 0, s"unbalanced [ in: ${sql.substring(i).take(60)}")
+          val r = Lexer.closeParen(sql, i)
+          require(r >= 0, s"unbalanced [ in: ${sql.substring(i).take(60)}")
           out ++= s"array(${bracketLiterals(sql.substring(i + 1, r))})"
           i = r + 1
         }
@@ -2865,15 +2627,12 @@ private[graft] object Functions {
   private[graft] def rewriteUnnest(sql: String): String = {
     val upper = sql.toUpperCase(java.util.Locale.ROOT)
     if (!upper.contains("UNNEST")) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     val out = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
+    var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inStr) { out += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inStr = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) { out ++= sql.substring(i, e); i = e }
       else if ((c == 'U' || c == 'u') && upper.startsWith("UNNEST", i) &&
         (i == 0 || !isWord(sql.charAt(i - 1))) &&
         (i + 6 >= sql.length || !isWord(sql.charAt(i + 6)))) {
@@ -2905,28 +2664,17 @@ private[graft] object Functions {
               "`FROM t, UNNEST(expr) AS x`, `FROM t [CROSS] JOIN UNNEST(expr) AS x` " +
               "or `FROM t LEFT JOIN UNNEST(expr) AS x [ON TRUE]`")
         out.setLength(0); out ++= kept
-        // UNNEST ( args ) — balanced, quote-aware
-        var p = i + 6
-        while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
+        // UNNEST ( args )
+        val p = Lexer.skipSpace(sql, i + 6)
         require(p < sql.length && sql.charAt(p) == '(', "UNNEST must be called with (expr)")
-        val argStart = p + 1
-        var depth = 1; var q = argStart; var s2 = false
-        while (q < sql.length && depth > 0) {
-          val ch = sql.charAt(q)
-          if (s2) { if (ch == '\'') s2 = false }
-          else if (ch == '\'') s2 = true
-          else if (ch == '(') depth += 1
-          else if (ch == ')') depth -= 1
-          q += 1
-        }
-        require(depth == 0, "unbalanced parens in UNNEST(...)")
-        val args = sql.substring(argStart, q - 1)
+        val q = Lexer.closeParen(sql, p) + 1
+        require(q > 0, "unbalanced parens in UNNEST(...)")
+        val args = sql.substring(p + 1, q - 1)
         // optional [AS] alias
-        var r = q
-        while (r < sql.length && Character.isWhitespace(sql.charAt(r))) r += 1
+        var r = Lexer.skipSpace(sql, q)
         if (upper.startsWith("AS", r) && (r + 2 >= sql.length || !isWord(sql.charAt(r + 2)))) {
           r += 2
-          while (r < sql.length && Character.isWhitespace(sql.charAt(r))) r += 1
+          r = Lexer.skipSpace(sql, r)
         }
         var a = r
         while (a < sql.length && isWord(sql.charAt(a))) a += 1
@@ -2935,22 +2683,19 @@ private[graft] object Functions {
         require(!alias.equalsIgnoreCase("WITH"),
           "UNNEST(...) needs an element alias before WITH OFFSET")
         // optional WITH OFFSET [AS off]
-        var w = a
-        while (w < sql.length && Character.isWhitespace(sql.charAt(w))) w += 1
+        var w = Lexer.skipSpace(sql, a)
         var offset: Option[String] = None
         if (upper.startsWith("WITH", w) && (w + 4 >= sql.length || !isWord(sql.charAt(w + 4)))) {
-          var o = w + 4
-          while (o < sql.length && Character.isWhitespace(sql.charAt(o))) o += 1
+          var o = Lexer.skipSpace(sql, w + 4)
           require(upper.startsWith("OFFSET", o),
             "expected WITH OFFSET after the UNNEST alias")
           o += 6
-          var o2 = o
-          while (o2 < sql.length && Character.isWhitespace(sql.charAt(o2))) o2 += 1
+          var o2 = Lexer.skipSpace(sql, o)
           // a custom offset name requires AS (a bare following word is
           // the next clause keyword, not an alias)
           if (upper.startsWith("AS", o2) && (o2 + 2 >= sql.length || !isWord(sql.charAt(o2 + 2)))) {
             o2 += 2
-            while (o2 < sql.length && Character.isWhitespace(sql.charAt(o2))) o2 += 1
+            o2 = Lexer.skipSpace(sql, o2)
             var o3 = o2
             while (o3 < sql.length && isWord(sql.charAt(o3))) o3 += 1
             require(o3 > o2, "WITH OFFSET AS needs a name")
@@ -2965,11 +2710,9 @@ private[graft] object Functions {
         var end = offset.map(_ => w).getOrElse(a)
         // a LEFT JOIN form may carry BigQuery's vestigial ON TRUE
         if (outer) {
-          var o = end
-          while (o < sql.length && Character.isWhitespace(sql.charAt(o))) o += 1
+          val o = Lexer.skipSpace(sql, end)
           if (upper.startsWith("ON", o) && (o + 2 >= sql.length || !isWord(sql.charAt(o + 2)))) {
-            var o2 = o + 2
-            while (o2 < sql.length && Character.isWhitespace(sql.charAt(o2))) o2 += 1
+            val o2 = Lexer.skipSpace(sql, o + 2)
             require(upper.startsWith("TRUE", o2) &&
               (o2 + 4 >= sql.length || !isWord(sql.charAt(o2 + 4))),
               "LEFT JOIN UNNEST supports only ON TRUE (the lateral relationship is implicit)")
@@ -3002,13 +2745,11 @@ private[graft] object Functions {
       "NUMERIC" -> "DECIMAL(38,9)", "BIGNUMERIC" -> "DECIMAL(38,18)",
       "DATETIME" -> "TIMESTAMP_NTZ", "BYTES" -> "BINARY")
     val out = new StringBuilder
-    var i = 0; var inQ = false; var inTick = false
+    var i = 0
     while (i < text.length) {
       val c = text.charAt(i)
-      if (inQ) { out += c; if (c == '\'') inQ = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inQ = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(text, i)
+      if (e > i) { out ++= text.substring(i, e); i = e }
       else if (Character.isLetter(c) &&
         (i == 0 || !(Character.isLetterOrDigit(text.charAt(i - 1)) || text.charAt(i - 1) == '_'))) {
         var j = i
@@ -3034,19 +2775,16 @@ private[graft] object Functions {
     */
   private[graft] def mapBqTypesInCasts(text: String): String = {
     val out = new StringBuilder
-    var i = 0; var inQ = false; var inTick = false
+    var i = 0
     var depth = 0
     // stack of open casts: paren depth at which each cast's arg list
     // opened; typeFrom = that depth once the cast's own AS was seen
     var castDepths = List.empty[Int]
     var typeDepths = List.empty[Int]
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     while (i < text.length) {
       val c = text.charAt(i)
-      if (inQ) { out += c; if (c == '\'') inQ = false; i += 1 }
-      else if (inTick) { out += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { out += c; inQ = true; i += 1 }
-      else if (c == '`') { out += c; inTick = true; i += 1 }
+      val e = Lexer.opaqueEnd(text, i)
+      if (e > i) { out ++= text.substring(i, e); i = e }
       else if (c == '(') { out += c; depth += 1; i += 1 }
       else if (c == ')') {
         depth -= 1
@@ -3058,14 +2796,13 @@ private[graft] object Functions {
         }
         out += c; i += 1
       }
-      else if (Character.isLetter(c) && (i == 0 || !isWordChar(text.charAt(i - 1)))) {
+      else if (Character.isLetter(c) && (i == 0 || !isWord(text.charAt(i - 1)))) {
         var j = i
-        while (j < text.length && isWordChar(text.charAt(j))) j += 1
+        while (j < text.length && isWord(text.charAt(j))) j += 1
         val w = text.substring(i, j)
         val up = w.toUpperCase(java.util.Locale.ROOT)
         // lookahead: next non-space char
-        var k = j
-        while (k < text.length && Character.isWhitespace(text.charAt(k))) k += 1
+        val k = Lexer.skipSpace(text, j)
         if ((up == "CAST" || up == "SAFE_CAST" || up == "TRY_CAST") &&
             k < text.length && text.charAt(k) == '(') {
           out ++= (if (up == "SAFE_CAST") "TRY_CAST" else w)

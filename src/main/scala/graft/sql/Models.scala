@@ -1,5 +1,7 @@
 package graft.sql
 
+import Lexer.isWord
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.GraftSql
@@ -31,64 +33,35 @@ private[graft] object Models {
       "ML.QUANTILE_BUCKETIZE", "ML.IMPUTER", "ML.ROBUST_SCALER",
       "ML.MAX_ABS_SCALER", "ML.ONE_HOT_ENCODER", "ML.LABEL_ENCODER")
     if (!names.exists(upper.contains)) return sql
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     val out = new StringBuilder
-    var i = 0; var inS = false; var inT = false
+    var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inS) { out += c; if (c == '\'') inS = false; i += 1 }
-      else if (inT) { out += c; if (c == '`') inT = false; i += 1 }
-      else if (c == '\'') { out += c; inS = true; i += 1 }
-      else if (c == '`') { out += c; inT = true; i += 1 }
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) { out ++= sql.substring(i, e); i = e }
       else {
-        val hit = if ((c == 'M' || c == 'm') && (i == 0 || !isWord(sql.charAt(i - 1))))
-          names.find(n => upper.startsWith(n, i) &&
-            (i + n.length >= sql.length || !isWord(sql.charAt(i + n.length))))
-        else None
+        val hit = if (c == 'M' || c == 'm') names.find(Lexer.wordAt(sql, _, i)) else None
         hit match {
           case Some(n) =>
-            var p = i + n.length
-            while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
+            val p = Lexer.skipSpace(sql, i + n.length)
             require(p < sql.length && sql.charAt(p) == '(', s"$n must be called with (expr)")
-            var depth = 1; var q = p + 1; var s2 = false; var t2 = false
-            while (q < sql.length && depth > 0) {
-              val ch = sql.charAt(q)
-              if (s2) { if (ch == '\'') s2 = false }
-              else if (t2) { if (ch == '`') t2 = false }
-              else if (ch == '\'') s2 = true
-              else if (ch == '`') t2 = true
-              else if (ch == '(') depth += 1
-              else if (ch == ')') depth -= 1
-              q += 1
-            }
-            require(depth == 0, s"unbalanced parens in $n(...)")
+            val q = Lexer.closeParen(sql, p) + 1
+            require(q > 0, s"unbalanced parens in $n(...)")
             val x = sql.substring(p + 1, q - 1).trim
-            var r = q
-            while (r < sql.length && Character.isWhitespace(sql.charAt(r))) r += 1
-            require(upper.startsWith("OVER", r) &&
-              (r + 4 >= sql.length || !isWord(sql.charAt(r + 4))),
+            var r = Lexer.skipSpace(sql, q)
+            require(Lexer.wordAt(sql, "OVER", r),
               s"$n is supported in its analytic form only: $n(expr) OVER (...) — " +
                 "the OVER-less TRANSFORM spelling computes training statistics, " +
                 "which this engine spells as an explicit window")
             r += 4
-            while (r < sql.length && Character.isWhitespace(sql.charAt(r))) r += 1
+            r = Lexer.skipSpace(sql, r)
             // the window: a parenthesized spec (body kept for ORDER BY
             // injection) or a bare window name
             val specBody: Option[String] =
               if (r < sql.length && sql.charAt(r) == '(') {
-                var d2 = 1; var e = r + 1; var s3 = false; var t3 = false
-                while (e < sql.length && d2 > 0) {
-                  val ch = sql.charAt(e)
-                  if (s3) { if (ch == '\'') s3 = false }
-                  else if (t3) { if (ch == '`') t3 = false }
-                  else if (ch == '\'') s3 = true
-                  else if (ch == '`') t3 = true
-                  else if (ch == '(') d2 += 1
-                  else if (ch == ')') d2 -= 1
-                  e += 1
-                }
-                require(d2 == 0, s"unbalanced parens in $n(...) OVER (...)")
-                val w = sql.substring(r + 1, e - 1); i = e; Some(w)
+                val close = Lexer.closeParen(sql, r)
+                require(close >= 0, s"unbalanced parens in $n(...) OVER (...)")
+                val w = sql.substring(r + 1, close); i = close + 1; Some(w)
               } else {
                 var e = r
                 while (e < sql.length && isWord(sql.charAt(e))) e += 1
@@ -99,24 +72,7 @@ private[graft] object Models {
               case Some(b) => s"OVER ($b)"
               case None => s"OVER ${sql.substring(r, i)}"
             }
-            // split the call's top-level comma arguments
-            val parts = {
-              val items = scala.collection.mutable.ListBuffer.empty[String]
-              var st = 0; var d3 = 0; var s4 = false; var t4 = false; var k2 = 0
-              while (k2 < x.length) {
-                val ch = x.charAt(k2)
-                if (s4) { if (ch == '\'') s4 = false }
-                else if (t4) { if (ch == '`') t4 = false }
-                else if (ch == '\'') s4 = true
-                else if (ch == '`') t4 = true
-                else if (ch == '(' || ch == '[') d3 += 1
-                else if (ch == ')' || ch == ']') d3 -= 1
-                else if (ch == ',' && d3 == 0) { items += x.substring(st, k2).trim; st = k2 + 1 }
-                k2 += 1
-              }
-              items += x.substring(st).trim
-              items.toSeq
-            }
+            val parts = Lexer.splitTop(x)
             val f = parts.head
             val xd = s"CAST(($f) AS DOUBLE)"
             // the encoder pair shares one vocabulary rule: every
@@ -576,46 +532,17 @@ private[graft] object Models {
   private[graft] def rewriteMlPredict(spark: SparkSession, sql0: String): String = {
     def onePass(sql: String, fnName: String,
                 run: (SparkSession, String) => DataFrame): String = {
-      val upper = sql.toUpperCase(java.util.Locale.ROOT)
-      if (!upper.contains(fnName)) return sql
-      // top-level call spans, the VECTOR_SEARCH walk
-      val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int)]
-      var i = 0; var inStr = false; var inTick = false
-      while (i < sql.length) {
-        val c = sql.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false; i += 1 }
-        else if (inTick) { if (c == '`') inTick = false; i += 1 }
-        else if (c == '\'') { inStr = true; i += 1 }
-        else if (c == '`') { inTick = true; i += 1 }
-        else if ((c == 'M' || c == 'm') && upper.startsWith(fnName, i) &&
-          (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1)) && sql.charAt(i - 1) != '_' &&
-            sql.charAt(i - 1) != '.')) {
-          var p = i + fnName.length
-          while (p < sql.length && Character.isWhitespace(sql.charAt(p))) p += 1
-          if (p < sql.length && sql.charAt(p) == '(') {
-            val argStart = p + 1
-            var depth = 1; var q = argStart; var s2 = false
-            while (q < sql.length && depth > 0) {
-              val ch = sql.charAt(q)
-              if (s2) { if (ch == '\'') s2 = false }
-              else if (ch == '\'') s2 = true
-              else if (ch == '(') depth += 1
-              else if (ch == ')') depth -= 1
-              if (depth > 0) q += 1
-            }
-            require(depth == 0, s"unbalanced parentheses in $fnName call")
-            spans += ((i, argStart, q, q + 1))
-            i = q + 1
-          } else i = p
-        } else i += 1
-      }
-      if (spans.isEmpty) return sql
+      if (!sql.toUpperCase(java.util.Locale.ROOT).contains(fnName)) return sql
+      // call spans, the VECTOR_SEARCH walk (a dotted `x.ML.PREDICT` is not ours)
+      val spans = Lexer.calls(sql, fnName)
+        .filter { case (i, _, _) => i == 0 || sql.charAt(i - 1) != '.' }
       var out = sql
-      spans.reverseIterator.foreach { case (start, argStart, argEnd, end) =>
-        val df = run(spark, out.substring(argStart, argEnd))
+      spans.reverseIterator.foreach { case (start, open, close) =>
+        require(close >= 0, s"unbalanced parentheses in $fnName call")
+        val df = run(spark, out.substring(open + 1, close))
         val view = s"__ml_call_${GraftSql.asOfCounter.incrementAndGet()}"
         df.createOrReplaceTempView(view)
-        out = out.substring(0, start) + view + out.substring(end)
+        out = out.substring(0, start) + view + out.substring(close + 1)
       }
       out
     }

@@ -1,5 +1,7 @@
 package graft.sql
 
+import Lexer.isWord
+
 /** BigQuery pipe-syntax rewrite family, split out of [[graft.GraftSql]]
   * (round 13 — pure mechanical move, same textual behavior).
   */
@@ -44,40 +46,30 @@ private[graft] object Pipes {
     * bookkeeping.
     */
   private def rewriteOnePipeRegion(sql: String): String = {
-    // quote-aware scan: first |> and its enclosing open-paren stack
+    // first |> and its enclosing open-paren stack
     var first = -1; var stackAtFirst: List[Int] = Nil
     val stack = scala.collection.mutable.Stack.empty[Int]
-    var i = 0; var inS = false; var inT = false
+    var i = 0
     while (i < sql.length && first < 0) {
-      val c = sql.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else if (inT) { if (c == '`') inT = false }
-      else if (c == '\'') inS = true
-      else if (c == '`') inT = true
-      else if (c == '(') stack.push(i)
-      else if (c == ')') { if (stack.nonEmpty) stack.pop() }
-      else if (c == '|' && i + 1 < sql.length && sql.charAt(i + 1) == '>' &&
-        (i == 0 || sql.charAt(i - 1) != '|')) {
-        first = i; stackAtFirst = stack.toList
+      val e = Lexer.opaqueEnd(sql, i)
+      if (e > i) i = e
+      else {
+        val c = sql.charAt(i)
+        if (c == '(') stack.push(i)
+        else if (c == ')') { if (stack.nonEmpty) stack.pop() }
+        else if (c == '|' && i + 1 < sql.length && sql.charAt(i + 1) == '>' &&
+          (i == 0 || sql.charAt(i - 1) != '|')) {
+          first = i; stackAtFirst = stack.toList
+        }
+        i += 1
       }
-      i += 1
     }
     if (first < 0) return sql
     stackAtFirst.headOption match {
       case None => pipeToStandard(sql)
       case Some(open) =>
-        var depth = 1; var j = open + 1; var s = false; var t = false
-        while (j < sql.length && depth > 0) {
-          val ch = sql.charAt(j)
-          if (s) { if (ch == '\'') s = false }
-          else if (t) { if (ch == '`') t = false }
-          else if (ch == '\'') s = true
-          else if (ch == '`') t = true
-          else if (ch == '(') depth += 1
-          else if (ch == ')') depth -= 1
-          j += 1
-        }
-        val close = j - 1
+        val close = Lexer.closeParen(sql, open)
+        require(close >= 0, "pipe syntax: unbalanced parentheses around |>")
         sql.substring(0, open + 1) + pipeToStandard(sql.substring(open + 1, close)) +
           sql.substring(close)
     }
@@ -87,72 +79,20 @@ private[graft] object Pipes {
     * innermost-first) into nested standard SQL.
     */
   private def pipeToStandard(text: String): String = {
-    def isWord(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     // split on top-level |>
+    def isPipe(k: Int) = text.startsWith("|>", k) && (k == 0 || text.charAt(k - 1) != '|')
     val segs = scala.collection.mutable.ListBuffer.empty[String]
-    var start = 0; var depth = 0; var s = false; var t = false; var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (s) { if (c == '\'') s = false }
-      else if (t) { if (c == '`') t = false }
-      else if (c == '\'') s = true
-      else if (c == '`') t = true
-      else if (c == '(' || c == '[') depth += 1
-      else if (c == ')' || c == ']') depth -= 1
-      else if (depth == 0 && c == '|' && i + 1 < text.length && text.charAt(i + 1) == '>' &&
-        (i == 0 || text.charAt(i - 1) != '|')) {
-        segs += text.substring(start, i); start = i + 2; i += 1
-      }
-      i += 1
+    var start = 0
+    var at = Lexer.findTop(text, 0, text.length)(isPipe)
+    while (at >= 0) {
+      segs += text.substring(start, at); start = at + 2
+      at = Lexer.findTop(text, start, text.length)(isPipe)
     }
     segs += text.substring(start)
     if (segs.size < 2) return text
-    def splitTop(item: String, sep: Char): Seq[String] = {
-      val out = scala.collection.mutable.ListBuffer.empty[String]
-      var st = 0; var d = 0; var qs = false; var qt = false; var k = 0
-      while (k < item.length) {
-        val c = item.charAt(k)
-        if (qs) { if (c == '\'') qs = false }
-        else if (qt) { if (c == '`') qt = false }
-        else if (c == '\'') qs = true
-        else if (c == '`') qt = true
-        else if (c == '(' || c == '[') d += 1
-        else if (c == ')' || c == ']') d -= 1
-        else if (c == sep && d == 0) { out += item.substring(st, k).trim; st = k + 1 }
-        k += 1
-      }
-      out += item.substring(st).trim
-      out.toSeq
-    }
-    // top-level word-bounded keyword position within an item, or -1
-    def kwPos(item: String, kw: String): Int = {
-      val up = item.toUpperCase(java.util.Locale.ROOT)
-      var d = 0; var qs = false; var qt = false; var k = 0
-      while (k < item.length) {
-        val c = item.charAt(k)
-        if (qs) { if (c == '\'') qs = false }
-        else if (qt) { if (c == '`') qt = false }
-        else if (c == '\'') qs = true
-        else if (c == '`') qt = true
-        else if (c == '(' || c == '[') d += 1
-        else if (c == ')' || c == ']') d -= 1
-        else if (d == 0 && up.startsWith(kw, k) &&
-          (k == 0 || !isWord(item.charAt(k - 1))) &&
-          (k + kw.length >= item.length || !isWord(item.charAt(k + kw.length))))
-          return k
-        k += 1
-      }
-      -1
-    }
     // `expr [AS alias]` — last top-level AS
     def exprAlias(item: String): (String, Option[String]) = {
-      var last = -1; var from = 0
-      var p = kwPos(item, "AS")
-      while (p >= 0) {
-        last = from + p
-        from = from + p + 2
-        p = if (from < item.length) kwPos(item.substring(from), "AS") else -1
-      }
+      val last = Lexer.lastTopWord(item, "AS")
       if (last < 0) (item.trim, None)
       else (item.substring(0, last).trim, Some(item.substring(last + 2).trim))
     }
@@ -184,7 +124,7 @@ private[graft] object Pipes {
         case "SELECT" => q = s"SELECT $rest $fromQ"
         case "EXTEND" => q = s"SELECT *, $rest $fromQ"
         case "SET" =>
-          val items = splitTop(rest, ',').map { it =>
+          val items = Lexer.splitTop(rest).map { it =>
             val eq = it.indexOf('=')
             require(eq > 0, s"pipe SET expects `col = expr`, got: $it")
             s"${it.substring(eq + 1).trim} AS ${it.substring(0, eq).trim}"
@@ -192,7 +132,7 @@ private[graft] object Pipes {
           q = s"SELECT * REPLACE (${items.mkString(", ")}) $fromQ"
         case "DROP" => q = s"SELECT * EXCEPT ($rest) $fromQ"
         case "RENAME" =>
-          val items = splitTop(rest, ',').map { it =>
+          val items = Lexer.splitTop(rest).map { it =>
             val (old, nw) = exprAlias(it)
             require(nw.isDefined, s"pipe RENAME expects `old AS new`, got: $it")
             (old, nw.get)
@@ -209,7 +149,7 @@ private[graft] object Pipes {
           require(rest.isEmpty, s"pipe DISTINCT takes no arguments, got: $rest")
           q = s"SELECT DISTINCT * $fromQ"
         case "AGGREGATE" =>
-          val g = kwPos(rest, "GROUP")
+          val g = Lexer.topWord(rest, "GROUP")
           val (aggPart, groupPart, orderToo) =
             if (g < 0) (rest, "", false)
             else {
@@ -225,7 +165,7 @@ private[graft] object Pipes {
           if (groupPart.isEmpty) q = s"SELECT $aggPart $fromQ"
           else {
             // group item: expr [AS alias] [ASC|DESC (GROUP AND ORDER BY only)]
-            val gItems = splitTop(groupPart, ',').map { it0 =>
+            val gItems = Lexer.splitTop(groupPart).map { it0 =>
               val up = it0.toUpperCase(java.util.Locale.ROOT)
               val (it, dir) =
                 if (up.endsWith(" DESC")) (it0.substring(0, it0.length - 5).trim, " DESC")
@@ -254,7 +194,7 @@ private[graft] object Pipes {
             else if (restUp.startsWith("DISTINCT")) ("DISTINCT", rest.substring(8).trim)
             else throw new IllegalArgumentException(
               s"pipe $kw needs ALL or DISTINCT (BigQuery requires it): $seg")
-          val operands = splitTop(operandsText, ',')
+          val operands = Lexer.splitTop(operandsText)
           require(operands.nonEmpty && operands.forall(_.nonEmpty),
             s"pipe $kw needs at least one parenthesized query operand")
           q = operands.foldLeft(s"SELECT * FROM ($q)") { (acc, op) =>

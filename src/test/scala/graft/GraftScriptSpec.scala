@@ -30,6 +30,23 @@ class GraftScriptSpec extends SparkSuite {
     assert(out3.head().getString(0) == "it's" && out3.head().getInt(1) == 4)
   }
 
+  test("scripts lex literals, comments and hints the way Spark does") {
+    // a ';' inside a double-quoted literal or a comment ends nothing
+    val r = GraftScript.run(spark,
+      """DECLARE n INT64 DEFAULT 1;
+        |SELECT "a;b" AS s, 'it\'s;' AS t, n AS n -- trailing; comment
+        |;""".stripMargin).head()
+    assert(r.getString(0) == "a;b" && r.getString(1) == "it's;" && r.getLong(2) == 1L)
+    val q = GraftScript.run(spark,
+      """SELECT "it's" AS a, x FROM VALUES (1),(2) AS t(x)
+        |QUALIFY ROW_NUMBER() OVER (ORDER BY x) = 1;""".stripMargin).collect()
+    assert(q.map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("it's", 1)))
+    val hinted = GraftScript.run(spark,
+      "/* a /* nested */ comment */ SELECT /*+ REPARTITION(3) */ x FROM VALUES (1),(2) AS t(x);")
+    assert(hinted.rdd.getNumPartitions == 3)
+    assert(GraftScript.run(spark, "SELECT /* a /* b */ c */ 1 AS one;").head().getInt(0) == 1)
+  }
+
   test("IF / ELSEIF / ELSE and WHILE drive distributed statements") {
     Seq((1L, 5.0), (2L, 15.0), (3L, 25.0), (4L, 35.0))
       .toDF("id", "v").createOrReplaceTempView("scr_u")

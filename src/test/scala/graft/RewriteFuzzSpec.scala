@@ -1,21 +1,23 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Deterministic fuzz over the textual statement rewrites — the
-  * property every scanner in GraftSql promises: QUOTED LITERAL
-  * CONTENT is opaque (a string that happens to spell `COUNTIF(` or
-  * `UNNEST(` or `[OFFSET(1)]` must survive byte-identically), rewrites
-  * are identity on trigger-free SQL, and rewriting is idempotent
-  * (applying a rewrite to its own output changes nothing — the
-  * fixpoint loops terminate because each pass is stable).
+/** Deterministic fuzz over GraftSql's own dialect pass list (all of
+  * it, in load's order) — the property the shared lexer promises
+  * every pass: what Spark reads as a string literal, a backtick
+  * identifier or a comment is OPAQUE (a literal that happens to spell
+  * `COUNTIF(` or `UNNEST(` or `[OFFSET(1)]`, in any quoting Spark
+  * accepts, must survive byte-identically), passes are identity on
+  * trigger-free SQL, and the chain is idempotent (applying it to its
+  * own output changes nothing — the fixpoint loops terminate because
+  * each pass is stable). Passes that take a session get the shared
+  * one; no text here triggers a catalog lookup, and the spec starts
+  * no Spark job.
   *
   * Hand-rolled generator (seeded — reproducible failures) rather than
   * scalacheck's forAll: the scalatest-plus bridge is not on this
   * classpath, and a seeded loop gives the same coverage with plainer
   * failure output.
   */
-class RewriteFuzzSpec extends AnyFunSuite {
+class RewriteFuzzSpec extends SparkSuite {
 
   private val pool = Seq(
     "COUNTIF(x > 1)", "SAFE_DIVIDE(a, b)", "DATE_ADD(d, INTERVAL 1 DAY)",
@@ -58,14 +60,7 @@ class RewriteFuzzSpec extends AnyFunSuite {
       (1 to 1 + rnd.nextInt(4)).map(_ => pool(rnd.nextInt(pool.size))).mkString(" ")
     }
 
-  private val rewrites: Seq[(String, String => String)] = Seq(
-    "bqFunctions" -> (graft.sql.Functions.rewriteBqFunctions(_)),
-    "generateFns" -> (graft.sql.Functions.rewriteGenerateFns(_)),
-    "jsonArrayFns" -> (graft.sql.Functions.rewriteJsonArrayFns(_)),
-    "tableSample" -> (GraftSql.rewriteTableSample(_)),
-    "starReplace" -> (GraftSql.rewriteStarReplace(_)),
-    "unnest" -> (graft.sql.Functions.rewriteUnnest(_)),
-    "pipes" -> (graft.sql.Pipes.rewritePipes(_)))
+  private lazy val rewrites: Seq[(String, String => String)] = GraftSql.passes(spark)
 
   test("quoted literal content is opaque to every rewrite") {
     val rnd = new scala.util.Random(42)
@@ -78,6 +73,35 @@ class RewriteFuzzSpec extends AnyFunSuite {
           s"$name rewrote inside a quoted literal:\n in: $sql\nout: $out")
       }
     }
+  }
+
+  // `content` in every opaque token class Spark's lexer has; None
+  // where the content cannot be spelled in that class
+  private def opaqueForms(content: String): Seq[String] = {
+    val esc = content.replace("\\", "\\\\")
+    Seq(
+      Some("'" + esc.replace("'", "\\'") + " \\' '"),
+      Some("\"" + esc.replace("\"", "\\\"") + "\""),
+      Seq('\'', '"').find(q => !content.contains(q)).map(q => s"R$q$content$q"),
+      Some("`" + content.replace("`", "``") + "`"),
+      Some(s"-- $content\n"),
+      if (content.contains("*/") || content.contains("/*")) None
+      else Some(s"/* outer /* $content */ still comment */")).flatten
+  }
+
+  test("literal, identifier and comment content is opaque to every pass") {
+    val rnd = new scala.util.Random(42)
+    val jobs = jobsStartedBy {
+      for (content <- samples(rnd, 300); tok <- opaqueForms(content)) {
+        val sql = s"SELECT $tok AS v FROM t WHERE x = 1 $tok"
+        for ((name, f) <- rewrites) {
+          val out = f(sql)
+          assert(out.contains(tok),
+            s"$name rewrote inside an opaque token:\n in: $sql\nout: $out")
+        }
+      }
+    }
+    assert(jobs == 0)
   }
 
   test("rewrites are identity on trigger-free SQL") {
@@ -93,16 +117,12 @@ class RewriteFuzzSpec extends AnyFunSuite {
   }
 
   test("the composed rewrite chain is idempotent on its own output") {
-    // the chain in load's order (the spark-independent stages): a
-    // rewrite applied to already-rewritten text must change nothing —
-    // this is what makes the internal fixpoint loops terminate, and
-    // what guarantees a statement containing the EXPANSION of a macro
-    // (e.g. written by hand in Spark dialect) is never re-mangled
-    def chain(sql: String): String =
-      graft.sql.Functions.rewriteUnnest(graft.sql.Functions.rewriteBqFunctions(
-        graft.sql.Functions.rewriteGenerateFns(graft.sql.Functions.rewriteJsonArrayFns(
-          GraftSql.rewriteStarReplace(GraftSql.rewriteTableSample(
-            graft.sql.Pipes.rewritePipes(sql)))))))
+    // the whole chain in load's order: a rewrite applied to
+    // already-rewritten text must change nothing — this is what makes
+    // the internal fixpoint loops terminate, and what guarantees a
+    // statement containing the EXPANSION of a macro (e.g. written by
+    // hand in Spark dialect) is never re-mangled
+    def chain(sql: String): String = rewrites.foldLeft(sql) { case (t, (_, f)) => f(t) }
     val triggerHeavy = Seq(
       "SELECT COUNTIF(x > 1) AS n, SAFE_DIVIDE(a, b) AS r FROM t",
       "SELECT GENERATE_ARRAY(1, 5, 2) AS g, GENERATE_DATE_ARRAY(lo, hi) AS d FROM t",

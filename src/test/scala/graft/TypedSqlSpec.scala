@@ -4018,6 +4018,31 @@ class TypedSqlSpec extends SparkSuite {
     }.getMessage.contains("unterminated"))
   }
 
+  test("Spark-lexed literals, comments and hints are opaque to the dialect passes") {
+    def one(sql: String): String = GraftSql.load(spark, sql).head().getString(0)
+    // double-quoted and backslash-escaped literals keep their content
+    assert(one("SELECT \"COUNTIF(x > 1)\" AS msg") == "COUNTIF(x > 1)")
+    assert(one("""SELECT 'don\'t COUNTIF(x > 1)' AS msg""") == "don't COUNTIF(x > 1)")
+    assert(one("""SELECT r'a\' AS msg""") == "a\\")
+    // a quote inside them no longer desynchronizes the QUALIFY scan
+    for (lit <- Seq("\"it's\"", """'it\'s'""")) {
+      val rows = GraftSql.load(spark, s"SELECT $lit AS a, x FROM VALUES (1),(2) AS t(x) " +
+        "QUALIFY ROW_NUMBER() OVER (ORDER BY x) = 1").collect()
+      assert(rows.map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("it's", 1)), lit)
+    }
+    // hints steer the plan exactly as through spark.sql
+    val hinted = "SELECT /*+ REPARTITION(3) */ x FROM VALUES (1),(2) AS t(x)"
+    assert(GraftSql.load(spark, hinted).rdd.getNumPartitions == 3)
+    assert(spark.sql(hinted).rdd.getNumPartitions == 3)
+    // nested block comments nest, as Spark's lexer nests them
+    assert(GraftSql.load(spark, "SELECT /* a /* b */ c */ 1 AS one").head().getInt(0) == 1)
+    // a bracket inside a literal does not break the operand capture of
+    // IN UNNEST and SAFE_OFFSET
+    assert(GraftSql.load(spark,
+      "SELECT concat(')', 'x') IN UNNEST(array(')x', 'y')) AS a").head().getBoolean(0))
+    assert(one("SELECT split(')a', ')')[SAFE_OFFSET(1)] AS b") == "a")
+  }
+
   test("inline OVER (w ...) refinement: merges with the named base; same composition louds") {
     import spark.implicits._
     Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0)).toDF("id", "g", "v")
