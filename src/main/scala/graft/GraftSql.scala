@@ -72,9 +72,9 @@ object GraftSql {
     // comments carry no statement semantics; hints stay (they steer
     // the plan) and every pass skips them as opaque text
     val sql0 = Lexer.stripComments(sql00)
-    // native-expression SQL spellings (COSINE_DISTANCE etc.) — cheap,
-    // idempotent, and statements must see them whatever session the
-    // caller built
+    // native-expression SQL spellings (COSINE_DISTANCE etc.):
+    // statements must see them whatever session the caller built; only
+    // names the session lacks are added, so this is a lookup per name
     graft.functions.SqlFunctions.register(spark)
     // CREATE TABLE / [MATERIALIZED] VIEW carrying an OPTIONS(...)
     // metadata clause (round 14): split the clause off textually,

@@ -4960,7 +4960,7 @@ object SparkEntry {
     // exercised by q3). DuckDB replays the analyzer with
     // list_has_all over the same split — hash-green
     "q_search_fn" -> ((s, d) => {
-      graft.functions.native.registerAll(s)
+      graft.functions.SqlFunctions.register(s)
       Tables.documents(s, d).createOrReplaceTempView("search_docs")
       graft.GraftSql.load(s,
         """SELECT 'q1_and' AS q, COUNT(*) AS n FROM search_docs WHERE SEARCH(text, 'the data')

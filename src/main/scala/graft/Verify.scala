@@ -1,48 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** The correctness face, over [[Harness]]:
+  *
+  *   graft.Verify <sfDir> <outDir> [face...]
+  *
+  * dumps each face's rows (default: every face) to `<outDir>/<face>`
+  * parquet, plus `oracle_sql.json` and `queries.json` for the DuckDB
+  * compare (`tools/check.py`).
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // optional trailing args: run only these query names (local iteration)
-    val only = args.drop(2).toSet
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
-    val cpus = GraftSession.envCpus
-    val spark: SparkSession = GraftSession.local(cpus)
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [face...]")
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // full query list so the checker can detect silently-failed dumps
-    Files.writeString(Paths.get(s"$outDir/queries.json"),
-      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
-    spark.stop()
+    try Harness.verify(spark, args(0), args(1), args.toSeq.drop(2))
+    finally spark.stop()
   }
 }

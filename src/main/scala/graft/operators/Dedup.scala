@@ -429,9 +429,9 @@ object Dedup {
     * The pairs APIs (`embeddingPairs*`) are quadratic in
     * duplicate-cluster size BY CONTRACT — a document duplicated c
     * times contributes c·(c−1)/2 pairs, so one viral boilerplate doc
-    * repeated 10⁶ times yields ~5·10¹¹ output rows (ScaleProbe
-    * measures exactly this blow-up: ×10 exact replicas made the pair
-    * query 34× slower at 10× data). A dedup pipeline doesn't need the
+    * repeated 10⁶ times yields ~5·10¹¹ output rows (a scale probe
+    * measured exactly this blow-up: ×10 exact replicas made the pair
+    * query 34× slower at 10× data, SURVEY §6). A dedup pipeline doesn't need the
     * pairs; it needs the DROP LIST. This routing keeps every stage
     * linear in duplicate mass:
     *

@@ -22,15 +22,4 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Register a native Catalyst expression under a SQL function name
-    * (session-scoped). This is how graft's codegen'd expressions get
-    * SQL spellings — the registry route, not a Scala UDF, so calls
-    * stay inside whole-stage codegen.
-    */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -4925,4 +4925,27 @@ class TypedSqlSpec extends SparkSuite {
     assert(sessions.count() >= gaps,
       s"expected at least $gaps closed sessions, got ${sessions.count()}")
   }
+
+  test("graft's SQL spellings are registered once per session, not on every statement") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val id = FunctionIdentifier("cosine_distance")
+    val reg = spark.sessionState.functionRegistry
+    GraftSql.load(spark, "SELECT 1 AS x").collect()
+    val builder = reg.lookupFunctionBuilder(id).get
+    val d = GraftSql.load(spark,
+      "SELECT cosine_distance(array(1.0, 0.0), array(0.0, 1.0)) AS d").head().getDouble(0)
+    assert(d == 1.0)
+    assert(reg.lookupFunctionBuilder(id).get eq builder, "a statement replaced the builder")
+    // a session that did not come from GraftSession gets them through load
+    val fresh = spark.newSession()
+    assert(!fresh.sessionState.functionRegistry.functionExists(id))
+    assert(GraftSql.load(fresh,
+      "SELECT cosine_distance(array(1.0, 0.0), array(0.0, 1.0)) AS d").head().getDouble(0) == 1.0)
+    // no spelling shadows a Spark built-in, so keeping a present name
+    // never keeps Spark's function in place of graft's
+    val names = Seq("cosine_distance", "euclidean_distance", "normalize", "normalize_and_casefold") ++
+      graft.functions.native.sqlFunctions.map(_._1)
+    assert(names.filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n))).isEmpty)
+  }
 }
