@@ -17,8 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_times.json"))
-    val spark = GraftSession.local(GraftSession.envCpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     try args.toList match {
       case "plans" :: outDir :: tag :: faces =>
         Harness.plans(spark, sfDir, outDir, tag, faces).foreach(println)

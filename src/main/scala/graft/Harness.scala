@@ -4,20 +4,35 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import scala.jdk.CollectionConverters._
 
 /** The one runner behind graft's two measurement mains, [[Bench]]
   * and [[Verify]]: face selection, forcing, quiescing, per-face timing,
   * plan writing and the Verify dump, each written once.
   *
-  * Every entry takes a live session and never stops it; only the two
-  * mains build and stop sessions, so a spec drives the same code on
-  * its shared session.
+  * Every other entry takes a live session and never stops it; only the
+  * two mains build ([[session]]) and stop sessions, so a spec drives the
+  * same code on its shared session.
   */
 object Harness {
 
   private val json = new ObjectMapper()
+
+  /** The mains' session, on `SPARK_GRAFT_CPUS` cores. Its managed
+    * tables (the DDL faces create some) live in the JVM's scratch
+    * root, so two runs on one box never share a warehouse.
+    */
+  def session(): SparkSession = {
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.builder(cpus).master(s"local[$cpus]")
+      .config("spark.sql.warehouse.dir", faces.Scratch.root.resolve("warehouse").toString)
+      .getOrCreate()
+    graft.functions.SqlFunctions.register(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** The faces named on the command line, in the order given; no names
     * means every face, sorted. An unknown name fails before any face
@@ -153,7 +168,9 @@ object Harness {
 
   /** Writes each face's formatted plan to `<outDir>/<face>_<tag>.txt`
     * (the plans/rNN evidence format) and returns one summary line per
-    * face: codegen spans and exchanges of the executed plan.
+    * face: the exchanges of that plan, and the codegen spans of the
+    * final plan. Under AQE, codegen spans exist only once the stages
+    * ran, so the face runs once after its plan is written.
     */
   def plans(spark: SparkSession, sfDir: String, outDir: String, tag: String,
             names: Seq[String]): Seq[String] = {
@@ -162,11 +179,15 @@ object Harness {
       val qe = SparkEntry.queries(face)(spark, sfDir).queryExecution
       val file = Paths.get(outDir, s"${face}_$tag.txt")
       Files.write(file, qe.explainString(FormattedMode).getBytes(UTF_8))
-      val plan = qe.executedPlan.toString
-      def count(word: String) = word.r.findAllIn(plan).size
-      s"$face: codegen spans=${count("WholeStageCodegen")} exchanges=${count("Exchange")} -> $file"
+      val exchanges = "Exchange".r.findAllIn(qe.executedPlan.toString).size
+      SQLExecution.withNewExecutionId(qe, Some("plans"))(qe.executedPlan.executeCollect())
+      val spans = Stages.collect(qe.executedPlan) { case w: WholeStageCodegenExec => w }.size
+      s"$face: codegen spans=$spans exchanges=$exchanges -> $file"
     }
   }
+
+  /** Plan traversal that descends into adaptive plans and query stages. */
+  private object Stages extends AdaptiveSparkPlanHelper
 
   /** The correctness dump: each selected face's rows to
     * `<outDir>/<face>` parquet, every face's oracle SQL to

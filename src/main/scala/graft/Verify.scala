@@ -11,8 +11,7 @@ package graft
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [face...]")
-    val spark = GraftSession.local(GraftSession.envCpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     try Harness.verify(spark, args(0), args(1), args.toSeq.drop(2))
     finally spark.stop()
   }

@@ -13,8 +13,9 @@ import graft.functions.native
   *    `PayloadCodec` contract (a real codec amortizes native-lib setup
   *    per partition; the container has no codec libraries, so
   *    `StubCodec` computes deterministic byte-level features).
-  *  - resize: a native codegen'd expression (`StridedBytes`) — binary
-  *    in, bounded binary out, no UDF serialization boundary. Only the
+  *  - resize: the native codegen'd `native.strided_bytes` expression
+  *    (the aHash downsample below) — binary in, bounded binary out,
+  *    no UDF serialization boundary. Only the
   *    SAMPLING RULE stands in for a real scaler; the dataflow is the
   *    production dataflow.
   *  - frame sampling: pure built-in Column composition (`sequence` +
@@ -65,16 +66,6 @@ object Multimodal {
       F.col("doc_id"),
       F.col("text").cast("binary").as("payload"),
       F.struct(F.col("source"), F.col("lang"), F.col("n_chars")).as("meta"))
-
-  /** Resize: deterministic fixed-budget byte downsample via the native
-    * `StridedBytes` expression — binary → bounded binary inside
-    * whole-stage codegen, metadata updated. Swap the expression for a
-    * codec-backed one to get true pixel rescaling; the schema and the
-    * plan shape stay identical.
-    */
-  def resizeStub(withBin: DataFrame, targetBytes: Int = 64): DataFrame =
-    withBin.withColumn("thumb", native.strided_bytes(F.col("payload"), targetBytes))
-      .withColumn("thumb_len", F.length(F.col("thumb")))
 
   /** Frame sampling: split the payload into fixed-size frames, keep
     * every `stride`-th one, exploded to (doc_id, frame_idx, frame)

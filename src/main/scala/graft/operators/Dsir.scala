@@ -140,27 +140,6 @@ object Dsir {
         F.size(F.col("__buckets")).as("n_grams"))
   }
 
-  /** Join-route scoring for bucket spaces too large to ride the plan
-    * as a literal: explode the bucket stream, join the weight frame
-    * (broadcast by default; `broadcastWeights = false` shuffles both
-    * sides for weight tables past broadcast size), and re-aggregate
-    * per document. Bit-identical to [[score]] (integer sums are
-    * order-free; spec-pinned).
-    */
-  def scoreJoin(docs: DataFrame, idCol: String, textCol: String,
-                w: DataFrame, buckets: Int,
-                broadcastWeights: Boolean = true): DataFrame = {
-    val wSide = if (broadcastWeights) F.broadcast(w) else w
-    val exploded = bucketStream(docs, idCol, textCol, buckets)
-      .select(F.col(idCol), F.posexplode_outer(F.col("__buckets")).as(Seq("__p", "bucket")))
-    exploded.join(wSide, Seq("bucket"), "left")
-      .groupBy(idCol)
-      .agg(
-        F.coalesce(F.sum(F.when(F.col("__p").isNotNull, F.col("w"))), F.lit(0L))
-          .cast("long").as("dsir_score"),
-        F.count(F.col("__p")).cast("int").as("n_grams"))
-  }
-
   /** Top-k documents by importance score, ties to the smaller id —
     * the deterministic "select the most target-like k" face. Bounded
     * per-partition top-k aggregate (≤ k rows of state per partition,

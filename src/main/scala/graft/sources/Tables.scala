@@ -42,8 +42,14 @@ object Tables {
         }
     }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    fanOut(spark, spark.read.parquet(s"$dir/$name.parquet"), s"$dir/$name.parquet")
+  /** Open `<dir>/<name>.parquet`; `fanOut` asks for [[fanOut]]'s
+    * round-robin spread after the scan.
+    */
+  def load(spark: SparkSession, dir: String, name: String, fanOut: Boolean = false): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.parquet(path)
+    if (fanOut) Tables.fanOut(spark, df, path) else df
+  }
 
   /** Scan-parallelism floor (r17, guide §2.5 "input skew"): each
     * calibration table is ONE parquet file with ONE row group, so its
@@ -67,42 +73,36 @@ object Tables {
     * Correctness: every face is partition-invariant by the repo-wide
     * determinism contract (integer/decimal folds, hash-keyed sampling,
     * total-order limits), so a round-robin fan-out changes no result —
-    * re-verified against the DuckDB oracle this round.
+    * re-verified against the DuckDB oracle.
+    *
+    * Opt-in per load (measured per face): the exchange wins only on
+    * single-pass map-heavy faces (JSON parse, gopher folds, DSIR
+    * scoring, embeddings: 1.3-2.5x); a face that references the same
+    * table from many subtrees or runs many small jobs pays it per
+    * reference and regresses 2-4x (fx_incremental 1.1 -> 4.0 s,
+    * sql_matview_refresh 0.8 -> 2.0 s).
     */
   private def fanOut(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    try {
-      // OPT-IN (r17, measured per face): the fan-out exchange wins only
-      // on single-pass map-heavy faces (JSON parse, gopher folds, DSIR
-      // scoring, embeddings: 1.3-2.5x) — a face that references the
-      // same table from many subtrees or runs many small jobs pays the
-      // exchange per reference and regresses 2-4x (fx_incremental 1.1
-      // -> 4.0 s, sql_matview_refresh 0.8 -> 2.0 s measured). So the
-      // default is OFF and the winning faces opt in via
-      // SparkEntry.withFanout; SPARK_GRAFT_FANOUT=on flips the global
-      // default for A/B sweeps.
-      if (spark.conf.get("spark.graft.scan.fanout",
-          sys.env.getOrElse("SPARK_GRAFT_FANOUT", "off")) != "on") return df
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      val bytes =
-        if (st.isFile) st.getLen
-        else fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-      val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-      val naturalSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-      val par = spark.sparkContext.defaultParallelism
-      if (bytes >= 192 * 1024L && naturalSplits < par) df.repartition(par)
-      else df
-    } catch { case _: Throwable => df }
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val bytes =
+      if (st.isFile) st.getLen
+      else fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
+    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+    val naturalSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
+    val par = spark.sparkContext.defaultParallelism
+    if (bytes >= 192 * 1024L && naturalSplits < par) df.repartition(par)
+    else df
   }
 
-  def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
-  def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
-  def customer(s: SparkSession, d: String): DataFrame  = load(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame  = load(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
-  def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
-  def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
+  def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
+  def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
+  def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")
+  def supplier(s: SparkSession, d: String): DataFrame = load(s, d, "supplier")
+  def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
+  def orders(s: SparkSession, d: String, fanOut: Boolean = false): DataFrame = load(s, d, "orders", fanOut)
+  def lineitem(s: SparkSession, d: String, fanOut: Boolean = false): DataFrame = load(s, d, "lineitem", fanOut)
   /** `events.ts` arrives as either parquet TIMESTAMP(NANOS) — which
     * Spark reads as an epoch-nanos long under
     * spark.sql.legacy.parquet.nanosAsLong=true — or plain
@@ -113,9 +113,9 @@ object Tables {
     * TIMESTAMP_NS → TIMESTAMP), and NTZ casts under the session's UTC
     * zone — value-preserving, matching DuckDB's naive-as-UTC reading.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String, fanOut: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = load(s, d, "events")
+    val raw = load(s, d, "events", fanOut)
     raw.schema("ts").dataType match {
       case LongType =>
         // integer division: `/` on longs coerces to double, whose 53-bit
@@ -128,6 +128,7 @@ object Tables {
       case _ => raw
     }
   }
-  def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
+  def documents(s: SparkSession, d: String, fanOut: Boolean = false): DataFrame =
+    load(s, d, "documents", fanOut)
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -174,24 +174,9 @@ object Versioned {
     // never collides with a racing committer or with debris from an
     // interrupted one; the MANIFEST write (finishStaged) is the commit
     // point — a data dir without a manifest is unreachable debris,
-    // reclaimed by vacuum's sweep
-    //
-    // Commit output sizing (r17, guide §6): at production scale a
-    // commit frame usually arrives POST-SHUFFLE on hundreds of
-    // partitions of real data, and writing it raw lands that many
-    // files per commit — set spark.graft.commit.rebalance=on there so
-    // AQE sizes output files to the advisory partition size (one file
-    // per ~64 MB). At calibration scale the inputs are one-partition
-    // scans and the rebalance exchange is pure overhead (A/B at sf0.1:
-    // sql_ddl_lifecycle 3.5 s raw vs 4.1 s rebalanced, same shape on
-    // sql_versioned_dml / sql_statement_forms), so the local default
-    // stays off — a data-shape-dependent knob, not a local[32] tune.
-    val sized =
-      if (spark.conf.get("spark.graft.commit.rebalance",
-          sys.env.getOrElse("SPARK_GRAFT_REBAL", "off")) == "on")
-        df.hint("rebalance")
-      else df
-    sized.write.mode("errorifexists").parquet(s"$table/$sub")
+    // reclaimed by vacuum's sweep. The frame is written as given: a
+    // caller that wants fewer, larger files sizes it before the call
+    df.write.mode("errorifexists").parquet(s"$table/$sub")
     val live =
       if (!append || prior.isEmpty) Seq(sub)
       else prior.last.live :+ sub

@@ -215,7 +215,7 @@ class BpeSpec extends SparkSuite {
       }
       syms
     }
-    val merges = SparkEntry.bpeFixtureMerges
+    val merges = faces.Kit.bpeFixtureMerges
     // crafted words exercising consecutive occurrences, boundary
     // anchoring, and chained merges (t+h then th+e), plus the corpus
     val words = Seq("the", "then", "anthem", "thethe", "ththe", "standing",

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{functions => F}
-import graft.operators.Dsir
+import graft.operators.{Dsir, DsirTwins}
 
 /** S11 — DSIR importance resampling. The fit's ln() is libm, so the
   * weight table is pinned against an independent driver-side
@@ -92,8 +92,8 @@ class DsirSpec extends SparkSuite {
     val wDf = w.toSeq.zipWithIndex
       .map { case (v, b) => (b.toLong, v) }.toDF("bucket", "w")
     val a = Dsir.score(docs, "doc_id", "text", w).orderBy("doc_id").collect()
-    val b = Dsir.scoreJoin(docs, "doc_id", "text", wDf, B).orderBy("doc_id").collect()
-    val c = Dsir.scoreJoin(docs, "doc_id", "text", wDf, B, broadcastWeights = false)
+    val b = DsirTwins.scoreJoin(docs, "doc_id", "text", wDf, B).orderBy("doc_id").collect()
+    val c = DsirTwins.scoreJoin(docs, "doc_id", "text", wDf, B, broadcastWeights = false)
       .orderBy("doc_id").collect()
     assert(a.toSeq === b.toSeq)
     assert(a.toSeq === c.toSeq)

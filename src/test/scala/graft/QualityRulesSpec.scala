@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{functions => F}
-import graft.operators.QualityRules
+import graft.operators.{QualityRules, QualityRulesTwins}
 import graft.operators.QualityRules.GopherThresholds
 
 /** E16/E17 — the published Gopher and C4 rule gates. Every measure is
@@ -163,7 +163,7 @@ class QualityRulesSpec extends SparkSuite {
   test("gopherRepetition is map-only and fires both ways on the decorated fixture") {
     val base = spark.read.parquet(s"$sf/documents.parquet")
     val g = QualityRules.gopherRepetition(
-      base.withColumn("text", SparkEntry.repetitionDecorated), "doc_id", "text")
+      base.withColumn("text", faces.Kit.repetitionDecorated), "doc_id", "text")
     assert(!g.queryExecution.executedPlan.toString.contains("Exchange"))
     val flags = Seq("pass_dup_lines", "pass_dup_line_chars",
       "pass_top2gram", "pass_top3gram", "pass_top4gram")
@@ -221,21 +221,21 @@ class QualityRulesSpec extends SparkSuite {
 
   test("gopherDupNGrams: native coverage expression is bit-identical to the HOF spelling") {
     val base = spark.read.parquet(s"$sf/documents.parquet")
-      .withColumn("text", SparkEntry.dupNGramDecorated)
+      .withColumn("text", faces.Kit.dupNGramDecorated)
     val crafted = Seq((9000L, "a b c d e a b c d e x"), (9001L, ""),
       (9002L, "p q r s t p q r s t p q r s t"), (9003L, "lone"))
       .toDF("doc_id", "text").withColumn("lang", F.lit("en"))
       .withColumn("source", F.lit("t")).withColumn("n_chars", F.length(F.col("text")))
     val docs = base.unionByName(crafted.select(base.columns.map(F.col): _*))
     val a = QualityRules.gopherDupNGrams(docs, "doc_id", "text").orderBy("doc_id").collect()
-    val b = QualityRules.gopherDupNGramsHof(docs, "doc_id", "text").orderBy("doc_id").collect()
+    val b = QualityRulesTwins.gopherDupNGramsHof(docs, "doc_id", "text").orderBy("doc_id").collect()
     assert(a.toSeq === b.toSeq)
   }
 
   test("gopherDupNGrams is map-only and fires both ways on the decorated fixture") {
     val base = spark.read.parquet(s"$sf/documents.parquet")
     val g = QualityRules.gopherDupNGrams(
-      base.withColumn("text", SparkEntry.dupNGramDecorated), "doc_id", "text")
+      base.withColumn("text", faces.Kit.dupNGramDecorated), "doc_id", "text")
     assert(!g.queryExecution.executedPlan.toString.contains("Exchange"))
     val flags = (5 to 10).map(n => s"pass_dup${n}gram")
     val agg = g.agg(F.count(F.lit(1)).as("n"),
@@ -268,8 +268,8 @@ class QualityRulesSpec extends SparkSuite {
     val base = spark.read.parquet(s"$sf/documents.parquet")
     // the driver-query decoration (kept in sync with SparkEntry)
     val g = QualityRules.gopher(
-      base.withColumn("text", SparkEntry.gopherDecorated), "doc_id", "text",
-      SparkEntry.gopherDriverThresholds)
+      base.withColumn("text", faces.Kit.gopherDecorated), "doc_id", "text",
+      faces.Kit.gopherDriverThresholds)
     val flags = Seq("pass_words", "pass_mean_word_len", "pass_symbol_ratio",
       "pass_bullet_lines", "pass_ellipsis_lines", "pass_alpha_words", "pass_stopwords")
     val agg = g.agg(F.count(F.lit(1)).as("n"),
@@ -280,7 +280,7 @@ class QualityRulesSpec extends SparkSuite {
       assert(k > 0 && k < n, s"rule $f must fire both ways on the fixture: $k/$n")
     }
     val c = QualityRules.c4Filters(
-      base.withColumn("text", SparkEntry.c4Decorated), "doc_id", "text")
+      base.withColumn("text", faces.Kit.c4Decorated), "doc_id", "text")
     val kept = c.where(F.col("keep")).count()
     assert(kept > 0 && kept < c.count())
   }

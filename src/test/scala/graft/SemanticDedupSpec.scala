@@ -74,7 +74,7 @@ class SemanticDedupSpec extends SparkSuite {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val cent = e.filter(F.col("vec_id") % 128 === 3)
       .select(F.col("vec_id").as("cell"), F.col("embedding").as("centroid"))
-    val r = Dedup.semanticDedup(SparkEntry.semanticFixture(e),
+    val r = Dedup.semanticDedup(faces.Kit.semanticFixture(e),
       "vec_id", "embedding", cent, tau = 0.98)
     val agg = r.agg(
       F.count(F.lit(1)).as("n"),
